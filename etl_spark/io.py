@@ -12,6 +12,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_spark.operators.caching import session_memo
+
 TABLES = (
     "region",
     "nation",
@@ -58,12 +60,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# applicationId × sf_dir × table → row count; config-sized driver
-# state feeding ONLY the partition-count heuristic below (one int per
-# table per data directory — never a result cache).
-_ROW_COUNTS: dict[tuple[str, str, str], int] = {}
-
-
 def adaptive_partitions(
     spark: SparkSession, sf_dir: str, name: str, rows_per_partition: int
 ) -> int:
@@ -75,14 +71,12 @@ def adaptive_partitions(
     and the per-iteration scheduler overhead dominates the work
     (measured on ml_kmeans_lloyd: ~1 s/iteration of overhead for ~2 ms
     of matmul), while a constant tuned for local would serialize a
-    real corpus. The row count is memoized per (session, dir, table)."""
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    n = _ROW_COUNTS.get(key)
-    if n is None:
-        n = load(spark, sf_dir, name).count()
-        while len(_ROW_COUNTS) >= 256:
-            _ROW_COUNTS.pop(next(iter(_ROW_COUNTS)))
-        _ROW_COUNTS[key] = n
+    real corpus. The row count is a ``session_memo`` per (session,
+    dir, table)."""
+    n = session_memo(
+        "row_counts", spark, (sf_dir, name),
+        lambda: load(spark, sf_dir, name).count(),
+    )
     return max(1, -(-n // rows_per_partition))
 
 

@@ -1,16 +1,29 @@
-"""Session-scoped keyed DataFrame cache — the ONE sanctioned way to
-hold a persisted frame across plan-builder calls.
+"""Session-scoped memos — the ONE sanctioned home for state a plan
+builder keeps across calls within a Spark session.
 
-A bare ``.persist()`` inside a registered builder leaks: every call
-stacks another copy in storage memory, and nothing ever unpersists it
-(a builder returns a lazy plan, so it cannot unpersist before the
-caller's action). The pattern that works — grown independently in the
-dedup posting-list index and the LSH band table, now extracted — is a
-module-level dict keyed on ``(applicationId, sf_dir)``:
+Two kinds, both keyed on ``(applicationId, key)``:
 
-* ``applicationId`` is stable for the session's lifetime; keying on
-  ``id(spark)`` would let CPython hand a recycled id to a NEW session
-  and return a frame bound to a stopped one.
+* ``session_cached`` / ``session_checkpointed`` hold a materialized
+  DataFrame per ``(session, sf_dir)``; ``evict`` unpersists them.
+* ``session_memo`` holds a plain Python value (trained weights,
+  centroids, learned merges, a built table's path, a row count) per
+  ``(session, key)``, at most 8 entries per memo name, oldest
+  dropped first; ``evict_session_memos`` drops them all.
+
+``applicationId`` is stable for the session's lifetime; keying on
+``id(spark)`` would let CPython hand a recycled id to a NEW session
+and return state bound to a stopped one. No other module reads it:
+``tests/test_registry_hygiene.py`` fails on any hand-rolled memo that
+builds its own session key.
+
+DataFrame-cache rules:
+
+* A bare ``.persist()`` inside a registered builder leaks: every call
+  stacks another copy in storage memory, and nothing ever unpersists
+  it (a builder returns a lazy plan, so it cannot unpersist before the
+  caller's action). ``tests/test_registry_hygiene.py`` enforces that
+  every raw ``.persist()`` outside this module pairs with an
+  ``unpersist()`` in the same function.
 * Reuse only while ``storageLevel.useMemory`` still holds — an
   external ``spark.catalog.clearCache()`` (bench reps do this between
   timings) silently unpersists, and a stale reuse would run every
@@ -18,16 +31,12 @@ module-level dict keyed on ``(applicationId, sf_dir)``:
 * Persist + ``count()`` BEFORE handing the frame to multi-consumer
   plans: Spark has no cross-plan ReusedExchange, so an unmaterialized
   "cached" frame recomputes its whole upstream once per consumer.
-
-``tests/test_registry_hygiene.py`` enforces the complement: every raw
-``.persist()`` call site outside this module must pair with an
-``unpersist()`` in the same function (the try/finally iterative-ML
-shape) — builders that need cross-call persistence come here.
 """
 
 from __future__ import annotations
 
-from collections.abc import Callable
+from collections.abc import Callable, Hashable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -36,6 +45,13 @@ _CACHES: dict[str, dict[tuple[str, str], DataFrame]] = {}
 
 # cache name -> {(applicationId, sf_dir): localCheckpointed DataFrame}
 _CHECKPOINTS: dict[str, dict[tuple[str, str], DataFrame]] = {}
+
+# memo name -> {(applicationId, key): plain Python value}
+_MEMOS: dict[str, dict[tuple[str, Hashable], Any]] = {}
+
+#: Entries kept per memo name; the oldest is dropped first. One
+#: contract drive touches a handful of data directories per session.
+_MEMO_CAP = 8
 
 
 def session_cached(
@@ -111,6 +127,28 @@ def session_checkpointed(
     return df
 
 
+def session_memo(
+    name: str,
+    spark: SparkSession,
+    key: Hashable,
+    build: Callable[[], Any],
+) -> Any:
+    """Return the value memoized for (``name``, session, ``key``),
+    calling ``build()`` only on a miss. The value is stored as
+    returned: callers that hand out mutable values copy them. Each
+    ``name`` keeps at most 8 entries, dropping the oldest first;
+    ``evict_session_memos`` drops them all."""
+    memo = _MEMOS.setdefault(name, {})
+    k = (spark.sparkContext.applicationId, key)
+    if k in memo:
+        return memo[k]
+    value = build()
+    while len(memo) >= _MEMO_CAP:
+        memo.pop(next(iter(memo)))
+    memo[k] = value
+    return value
+
+
 def _release_checkpoint(df: DataFrame) -> None:
     """Eagerly free a localCheckpoint's storage blocks. A checkpointed
     frame's analyzed plan IS the ``LogicalRDD`` holding the persisted
@@ -161,27 +199,22 @@ def evict(name: str | None = None) -> None:
 
 
 def evict_session_memos() -> None:
-    """Clear the driver-side Python memos that survive
-    ``spark.catalog.clearCache()`` — trained-model/centroid/vtable
-    state keyed per session (r11, verdict item: min-of-N bench reps of
-    the IVF/logreg/BPE/lakehouse families otherwise time rep 1 with
-    training and reps 2+ without it, so per-query warm numbers
-    silently exclude training). Bench harnesses call this wherever
-    they call ``clearCache()``; cross-QUERY sharing within one rep —
-    the legitimate optimization — is untouched because the memo
-    repopulates on first use inside the rep.
+    """Drop every ``session_memo`` entry, for every memo name.
 
-    Lazy imports: plans modules import this module at import time.
-    ``io._ROW_COUNTS`` (one int per table: the partition-count
-    heuristic) is deliberately NOT cleared — it is sizing metadata,
-    not a computed result."""
-    from etl_spark.plans import bpe, lakehouse, ml, ml_train
+    These values survive ``spark.catalog.clearCache()``; bench
+    harnesses call this wherever they call ``clearCache()`` so each
+    timed rep pays the training, learning and table builds a cold
+    query pays. Cross-query sharing within one rep is untouched: a
+    memo refills on first use.
 
-    ml._TRAINED_CENTS.clear()
-    ml_train._TRAIN_CACHE.clear()
-    bpe._LEARN_CACHE.clear()
-    lakehouse._VTABLE_CACHE.clear()
-    lakehouse._DVTABLE_CACHE.clear()
+    The ``adaptive_partitions`` row counts are memos too, so the next
+    query that sizes its partitions from a table (the ``sim_*`` and
+    ``ml_*`` embedding kernels) runs one extra ``count()`` on that
+    table after an eviction.
+
+    Built versioned tables stay on disk: a lazy frame returned before
+    the eviction may still read their files."""
+    _MEMOS.clear()
 
 
 def live_caches() -> dict[str, int]:

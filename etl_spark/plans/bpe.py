@@ -35,12 +35,11 @@ total, and ASCII string order agrees across engines.
 
 from __future__ import annotations
 
-from functools import reduce
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_spark.io import load
+from etl_spark.operators.caching import session_memo
 from etl_spark.plans.llm_text import BPE_ISH_PATTERN
 from etl_spark.plans.registry import register
 
@@ -202,17 +201,6 @@ def _apply_merge(sym: DataFrame, a: str, b: str) -> DataFrame:
     return merged
 
 
-#: Memoized learned merges per (appId, sf_dir): the fertility query
-#: reuses the learn query's result instead of re-running the loop.
-#: Stores only PLAIN PYTHON rows (merge list + vocab-sized per-word
-#: subword counts), never DataFrames — caching the final checkpointed
-#: frame would pin its RDD blocks (and transitively every
-#: intermediate checkpoint it references) for the life of the
-#: session. Both cached values are vocab-bounded (Heaps' law), so the
-#: per-(appId, sf_dir) entry is a few hundred KB, not a block pin.
-_LEARN_CACHE: dict = {}
-
-
 def _learn(spark: SparkSession, sf_dir: str):
     """Run BPE_MERGES merge iterations; returns (merge list
     [(rank, a, b, total)], seg rows [(w, n_sub)] — the final
@@ -221,32 +209,38 @@ def _learn(spark: SparkSession, sf_dir: str):
     checkpointed symbol table, and the only per-iteration driver
     traffic is the 1-row winning pair (config-bounded). Intermediate
     checkpoints are released by the ContextCleaner as soon as the
-    loop rebinds ``sym`` — nothing outlives this call."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _LEARN_CACHE:
-        return _LEARN_CACHE[key]
-    sym = _sym0(_word_types(spark, sf_dir)).localCheckpoint(eager=True)
-    merges = []
-    for k in range(1, BPE_MERGES + 1):
-        top = (
-            _pair_counts(sym)
-            .orderBy(F.col("total").desc(), F.col("a").asc(), F.col("b").asc())
-            .limit(1)
-            .collect()
-        )
-        a, b, total = top[0]["a"], top[0]["b"], top[0]["total"]
-        merges.append((k, a, b, total))
-        sym = _apply_merge(sym, a, b).localCheckpoint(eager=True)
-    seg_rows = [
-        (r["w"], int(r["n_sub"]))
-        for r in sym.groupBy("w")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_sub"))
-        .collect()  # vocab-bounded by construction
-    ]
-    while len(_LEARN_CACHE) >= 8:  # FIFO bound: one contract drive
-        _LEARN_CACHE.pop(next(iter(_LEARN_CACHE)))  # touches ~4 sf_dirs
-    _LEARN_CACHE[key] = (merges, seg_rows)
-    return _LEARN_CACHE[key]
+    loop rebinds ``sym`` — nothing outlives this call.
+
+    The result is a ``session_memo`` per (session, sf_dir), so the
+    fertility query reuses the learn query's merges. It holds only
+    plain Python rows, both vocab-bounded (Heaps' law), never the
+    final checkpointed frame — that would pin its RDD blocks, and
+    every intermediate checkpoint it references, for the session."""
+
+    def build():
+        sym = _sym0(_word_types(spark, sf_dir)).localCheckpoint(eager=True)
+        merges = []
+        for k in range(1, BPE_MERGES + 1):
+            top = (
+                _pair_counts(sym)
+                .orderBy(
+                    F.col("total").desc(), F.col("a").asc(), F.col("b").asc()
+                )
+                .limit(1)
+                .collect()
+            )
+            a, b, total = top[0]["a"], top[0]["b"], top[0]["total"]
+            merges.append((k, a, b, total))
+            sym = _apply_merge(sym, a, b).localCheckpoint(eager=True)
+        seg_rows = [
+            (r["w"], int(r["n_sub"]))
+            for r in sym.groupBy("w")
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_sub"))
+            .collect()  # vocab-bounded by construction
+        ]
+        return merges, seg_rows
+
+    return session_memo("bpe_learn", spark, sf_dir, build)
 
 
 @register(

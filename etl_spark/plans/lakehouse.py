@@ -31,11 +31,22 @@ broadcast, no driver collect anywhere.
 
 from __future__ import annotations
 
+import pathlib
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_spark.etl.merge import latest_wins_merge
+from etl_spark.etl.versioned import (
+    compact_versioned_deletes,
+    delete_from_versioned_table,
+    init_versioned_table,
+    merge_versioned_table,
+    read_versioned_table,
+)
 from etl_spark.io import load
+from etl_spark.operators.caching import session_memo
 from etl_spark.plans.registry import register
 
 TS_FMT_SPARK = "yyyy-MM-dd HH:mm:ss"
@@ -709,9 +720,6 @@ def pipeline_incremental_refresh(
 
 #: Number of commits the bridge builds: v0 = init, then two merges.
 VT_VERSIONS = 3
-#: One immutable versioned table per (session, sf_dir); FIFO-bounded
-#: like the other session memos.
-_VTABLE_CACHE: dict = {}
 
 
 def _vt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -733,46 +741,104 @@ def _vt_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _built_vtable(spark: SparkSession, sf_dir: str):
-    """Build (once per session+sf_dir) a real manifest-committed
-    versioned table under /tmp from three deterministic event batches
-    (event_id % 3): v0 = init, v1/v2 = copy-on-write merges. Returns
-    its path. Bounded materialization in the registry's sanctioned
-    sense: the artifact IS the subject of the query (time travel needs
-    committed files), and each commit writes only touched buckets."""
-    import hashlib
-    import pathlib
-    import tempfile
+#: Commit steps after the v0 init (batch event_id % 3 == 0) of each
+#: versioned-table flavour; one step is one commit. ``("merge", k)``
+#: merges batch k, ``("delete", bound)`` equality-deletes every served
+#: 'error' row under that resurrection bound, ``("compact", None)``
+#: folds the delete files away.
+_TABLE_STEPS = {
+    # v1/v2 = copy-on-write merges of batches 1 and 2
+    "vtable": tuple(("merge", k) for k in range(1, VT_VERSIONS)),
+    # the full merge-on-read lifecycle: v2 deletes (O(matched keys):
+    # pointers verbatim + one delete file); v3's batch-2 keys NEWER
+    # than their delete bound resurrect, the rest stay deleted; v4 is
+    # content-identical to v3
+    "dvtable": (
+        ("merge", 1), ("delete", "extract_ts"), ("merge", 2),
+        ("compact", None),
+    ),
+    # the same lifecycle under Iceberg's strictly-before-commit rule:
+    # at v3 EVERY re-delivered deleted key resurrects, even with an
+    # extract_ts older than its deleted row's
+    "seqtable": (
+        ("merge", 1), ("delete", "commit"), ("merge", 2),
+        ("compact", None),
+    ),
+}
 
-    from etl_spark.etl.versioned import (
-        init_versioned_table,
-        merge_versioned_table,
-    )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _VTABLE_CACHE:
-        return _VTABLE_CACHE[key]
-    # A FRESH unique directory per build (never rmtree a prior one):
-    # after FIFO eviction or under xdist workers sharing a session, a
-    # previously returned LAZY frame may still reference the old
-    # build's files mid-read — deleting them would fail its jobs.
-    # Leftovers are crash/eviction debris in /tmp, bounded by the
-    # FIFO cap and reclaimed by tmp cleanup, never by a live reader's
-    # files vanishing. (ADVICE r9, lakehouse.py _built_vtable.)
-    tag = hashlib.md5("|".join(key).encode()).hexdigest()[:12]
-    table = pathlib.Path(
-        tempfile.mkdtemp(prefix=f"etl_spark_vtable_{tag}_")
-    )
-    recs = _vt_records(spark, sf_dir)
-    init_versioned_table(recs.filter(F.col("event_id") % 3 == 0), table)
-    for k in range(1, VT_VERSIONS):
-        merge_versioned_table(
-            spark, table, recs.filter(F.col("event_id") % 3 == k)
+def _built_table(
+    spark: SparkSession, sf_dir: str, flavour: str
+) -> pathlib.Path:
+    """Path of the manifest-committed versioned table of ``flavour``
+    (a ``_TABLE_STEPS`` key) over this session's ``sf_dir`` events,
+    built once per (session, sf_dir) as a ``session_memo``. The
+    artifact IS the subject of the query (time travel needs committed
+    files), and each commit writes only touched buckets.
+
+    Every build lands in a FRESH unique directory, never an rmtree'd
+    prior one: after eviction, a previously returned LAZY frame may
+    still reference the old build's files mid-read."""
+
+    def build() -> pathlib.Path:
+        table = pathlib.Path(
+            tempfile.mkdtemp(prefix=f"etl_spark_{flavour}_")
         )
-    while len(_VTABLE_CACHE) >= 8:
-        _VTABLE_CACHE.pop(next(iter(_VTABLE_CACHE)))
-    _VTABLE_CACHE[key] = table
-    return table
+        recs = _vt_records(spark, sf_dir)
+
+        def batch(k: int) -> DataFrame:
+            return recs.filter(F.col("event_id") % 3 == k)
+
+        init_versioned_table(batch(0), table)
+        for op, arg in _TABLE_STEPS[flavour]:
+            if op == "merge":
+                merge_versioned_table(spark, table, batch(arg))
+            elif op == "delete":
+                delete_from_versioned_table(
+                    spark, table, "repo_dir = 'error'", bound=arg
+                )
+            else:
+                compact_versioned_deletes(spark, table)
+        return table
+
+    return session_memo(f"lakehouse_{flavour}", spark, sf_dir, build)
+
+
+def _version_checksums(
+    spark: SparkSession, sf_dir: str, flavour: str
+) -> DataFrame:
+    """dq_table_checksum's (COUNT, BIT_XOR, modular-sum) triple over
+    the canonical row rendering, per version of the ``flavour`` table
+    (v0 plus one per commit step), ordered by version."""
+    from functools import reduce
+
+    from etl_spark.plans.quality import _CK_MOD
+
+    table = _built_table(spark, sf_dir, flavour)
+    row_str = F.concat_ws(
+        "|",
+        F.col("repo_dir"),
+        F.col("file_id"),
+        F.col("extract_ts"),
+        F.col("event_id").cast("string"),
+    )
+    h = F.conv(F.substring(F.md5(row_str), 1, 15), 16, 10).cast("bigint")
+    parts = []
+    for v in range(len(_TABLE_STEPS[flavour]) + 1):
+        parts.append(
+            read_versioned_table(spark, table, version=v)
+            .select(h.alias("h"))
+            .agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.expr("bit_xor(h)").alias("xor_checksum"),
+                F.sum(F.col("h") % _CK_MOD).alias("modsum_checksum"),
+            )
+            .select(
+                F.lit(v).cast("int").alias("version"),
+                "n_rows", "xor_checksum", "modsum_checksum",
+            )
+        )
+    return reduce(DataFrame.unionByName, parts).orderBy("version")
 
 
 def _vt_checksum_oracle_sql() -> str:
@@ -841,88 +907,13 @@ def _vt_checksum_oracle_sql() -> str:
 def lakehouse_time_travel_checksums(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from functools import reduce
-
-    from etl_spark.etl.versioned import read_versioned_table
-    from etl_spark.plans.quality import _CK_MOD
-
-    table = _built_vtable(spark, sf_dir)
-    row_str = F.concat_ws(
-        "|",
-        F.col("repo_dir"),
-        F.col("file_id"),
-        F.col("extract_ts"),
-        F.col("event_id").cast("string"),
-    )
-    h = F.conv(F.substring(F.md5(row_str), 1, 15), 16, 10).cast("bigint")
-    parts = []
-    for v in range(VT_VERSIONS):
-        parts.append(
-            read_versioned_table(spark, table, version=v)
-            .select(h.alias("h"))
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.expr("bit_xor(h)").alias("xor_checksum"),
-                F.sum(F.col("h") % _CK_MOD).alias("modsum_checksum"),
-            )
-            .select(
-                F.lit(v).cast("int").alias("version"),
-                "n_rows", "xor_checksum", "modsum_checksum",
-            )
-        )
-    return reduce(DataFrame.unionByName, parts).orderBy("version")
+    return _version_checksums(spark, sf_dir, "vtable")
 
 
 # --------------------------------------------------------------------------
 # Merge-on-read equality deletes: DELETE → resurrect-by-merge →
 # compaction, every commit's served view hash-checked.
 # --------------------------------------------------------------------------
-
-_DVTABLE_CACHE: dict = {}
-
-
-def _built_dv_table(spark: SparkSession, sf_dir: str):
-    """Build (once per session+sf_dir) a versioned table exercising
-    the FULL merge-on-read lifecycle: v0 init (batch0), v1 merge
-    (batch1), v2 equality-DELETE of every served 'error'-typed row
-    (O(matched keys): pointers verbatim + one delete file), v3 merge
-    (batch2 — keys whose batch2 row is NEWER than their delete bound
-    resurrect, the Iceberg sequence rule; the rest stay deleted), v4
-    compaction (delete files folded away, content-identical)."""
-    import hashlib
-    import pathlib
-    import tempfile
-
-    from etl_spark.etl.versioned import (
-        compact_versioned_deletes,
-        delete_from_versioned_table,
-        init_versioned_table,
-        merge_versioned_table,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _DVTABLE_CACHE:
-        return _DVTABLE_CACHE[key]
-    # fresh unique dir per build — same live-reader rationale as
-    # _built_vtable above (ADVICE r9)
-    tag = hashlib.md5(("dv|" + "|".join(key)).encode()).hexdigest()[:12]
-    table = pathlib.Path(
-        tempfile.mkdtemp(prefix=f"etl_spark_dvtable_{tag}_")
-    )
-    recs = _vt_records(spark, sf_dir)
-    init_versioned_table(recs.filter(F.col("event_id") % 3 == 0), table)
-    merge_versioned_table(
-        spark, table, recs.filter(F.col("event_id") % 3 == 1)
-    )
-    delete_from_versioned_table(spark, table, "repo_dir = 'error'")
-    merge_versioned_table(
-        spark, table, recs.filter(F.col("event_id") % 3 == 2)
-    )
-    compact_versioned_deletes(spark, table)
-    while len(_DVTABLE_CACHE) >= 8:
-        _DVTABLE_CACHE.pop(next(iter(_DVTABLE_CACHE)))
-    _DVTABLE_CACHE[key] = table
-    return table
 
 
 def _dv_checksum_oracle_sql() -> str:
@@ -1033,36 +1024,7 @@ def _dv_checksum_oracle_sql() -> str:
 def lakehouse_equality_delete_checksums(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from functools import reduce
-
-    from etl_spark.etl.versioned import read_versioned_table
-    from etl_spark.plans.quality import _CK_MOD
-
-    table = _built_dv_table(spark, sf_dir)
-    row_str = F.concat_ws(
-        "|",
-        F.col("repo_dir"),
-        F.col("file_id"),
-        F.col("extract_ts"),
-        F.col("event_id").cast("string"),
-    )
-    h = F.conv(F.substring(F.md5(row_str), 1, 15), 16, 10).cast("bigint")
-    parts = []
-    for v in range(5):
-        parts.append(
-            read_versioned_table(spark, table, version=v)
-            .select(h.alias("h"))
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.expr("bit_xor(h)").alias("xor_checksum"),
-                F.sum(F.col("h") % _CK_MOD).alias("modsum_checksum"),
-            )
-            .select(
-                F.lit(v).cast("int").alias("version"),
-                "n_rows", "xor_checksum", "modsum_checksum",
-            )
-        )
-    return reduce(DataFrame.unionByName, parts).orderBy("version")
+    return _version_checksums(spark, sf_dir, "dvtable")
 
 
 # --------------------------------------------------------------------------
@@ -1070,51 +1032,6 @@ def lakehouse_equality_delete_checksums(
 # strictly-before-commit rule (bound="commit") — any later commit's
 # re-insert resurrects, extract_ts order notwithstanding.
 # --------------------------------------------------------------------------
-
-_SEQTABLE_CACHE: dict = {}
-
-
-def _built_seq_table(spark: SparkSession, sf_dir: str):
-    """Like ``_built_dv_table`` but the DELETE uses ``bound="commit"``
-    (etl/versioned.py): v0 init (batch0), v1 merge (batch1), v2
-    commit-bound equality delete of every served 'error' row, v3
-    merge (batch2 — EVERY re-delivered deleted key resurrects, even
-    with an extract_ts older than its deleted row's; keys batch2 does
-    not re-deliver stay deleted), v4 compaction."""
-    import hashlib
-    import pathlib
-    import tempfile
-
-    from etl_spark.etl.versioned import (
-        compact_versioned_deletes,
-        delete_from_versioned_table,
-        init_versioned_table,
-        merge_versioned_table,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _SEQTABLE_CACHE:
-        return _SEQTABLE_CACHE[key]
-    tag = hashlib.md5(("seq|" + "|".join(key)).encode()).hexdigest()[:12]
-    table = pathlib.Path(
-        tempfile.mkdtemp(prefix=f"etl_spark_seqtable_{tag}_")
-    )
-    recs = _vt_records(spark, sf_dir)
-    init_versioned_table(recs.filter(F.col("event_id") % 3 == 0), table)
-    merge_versioned_table(
-        spark, table, recs.filter(F.col("event_id") % 3 == 1)
-    )
-    delete_from_versioned_table(
-        spark, table, "repo_dir = 'error'", bound="commit"
-    )
-    merge_versioned_table(
-        spark, table, recs.filter(F.col("event_id") % 3 == 2)
-    )
-    compact_versioned_deletes(spark, table)
-    while len(_SEQTABLE_CACHE) >= 8:
-        _SEQTABLE_CACHE.pop(next(iter(_SEQTABLE_CACHE)))
-    _SEQTABLE_CACHE[key] = table
-    return table
 
 
 def _seq_checksum_oracle_sql() -> str:
@@ -1227,33 +1144,4 @@ def _seq_checksum_oracle_sql() -> str:
 def lakehouse_commit_seq_delete_checksums(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from functools import reduce
-
-    from etl_spark.etl.versioned import read_versioned_table
-    from etl_spark.plans.quality import _CK_MOD
-
-    table = _built_seq_table(spark, sf_dir)
-    row_str = F.concat_ws(
-        "|",
-        F.col("repo_dir"),
-        F.col("file_id"),
-        F.col("extract_ts"),
-        F.col("event_id").cast("string"),
-    )
-    h = F.conv(F.substring(F.md5(row_str), 1, 15), 16, 10).cast("bigint")
-    parts = []
-    for v in range(5):
-        parts.append(
-            read_versioned_table(spark, table, version=v)
-            .select(h.alias("h"))
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.expr("bit_xor(h)").alias("xor_checksum"),
-                F.sum(F.col("h") % _CK_MOD).alias("modsum_checksum"),
-            )
-            .select(
-                F.lit(v).cast("int").alias("version"),
-                "n_rows", "xor_checksum", "modsum_checksum",
-            )
-        )
-    return reduce(DataFrame.unionByName, parts).orderBy("version")
+    return _version_checksums(spark, sf_dir, "seqtable")

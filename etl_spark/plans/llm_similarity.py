@@ -37,16 +37,24 @@ QUANT = 1000
 DIM = 64
 
 
+# Target rows per task for the quantized-embedding Arrow kernels
+# (here and in plans/ml.py). The kernels are skinny numpy matmuls
+# (rows × DIM @ DIM × k), so a task's compute at this size is
+# milliseconds — the constant stops TASK-COUNT overhead from
+# dominating, not memory (16k rows × 64 dims × 8 B ≈ 8 MB per task).
+# A flat repartition(defaultParallelism) put sf0.1's 2,000 vectors in
+# 32 partitions, so every Lloyd iteration paid 32 task launches to do
+# ~2 ms of math, while a constant tuned local would serialize a real
+# corpus.
+EMB_ROWS_PER_PARTITION = 16384
+
+
 def _sim_partitions(spark: SparkSession, sf_dir: str) -> int:
-    """Size-derived partition count for the embedding scoring kernels
-    (guide §2.2): ceil(corpus rows / 16384), floor 1 — the flat
-    repartition(defaultParallelism) this replaces paid 32 task
-    launches per pass to score a few thousand vectors at the local
-    scales, while a constant tuned local would serialize a real
-    corpus. Same target as plans/ml.py's EMB_ROWS_PER_PARTITION: the
-    kernels are skinny numpy matmuls, so 16k rows ≈ 8 MB and
-    milliseconds per task."""
-    return adaptive_partitions(spark, sf_dir, "embeddings", 16384)
+    """Size-derived partition count for the embedding kernels:
+    ceil(corpus rows / EMB_ROWS_PER_PARTITION), floor 1."""
+    return adaptive_partitions(
+        spark, sf_dir, "embeddings", EMB_ROWS_PER_PARTITION
+    )
 
 
 def quantize(col) -> Column:
@@ -930,7 +938,7 @@ def _pq_d2_sql(a: str, b: str) -> str:
         f"batch pre-prunes to its local top-{PQ_TOPK} per query, so the "
         "only shuffle carries O(batches * queries * k) rows, never the "
         "corpus. All distances are exact BIGINTs on the quantization "
-        "lattice (llm_similarity.py:40-46), so ADC replays bit-identically "
+        "lattice (llm_similarity.quantize), so ADC replays bit-identically "
         "in the oracle's unrolled SQL.",
     tags=("similarity", "llm", "ann", "pq", "pandas-udf"),
 )

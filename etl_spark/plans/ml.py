@@ -47,44 +47,23 @@ from etl_spark.plans.llm_similarity import (
     PQ_TOPK,
     TOP_K,
     _pq_d2_sql,
+    _sim_partitions,
     _vec_cte,
     cosine,
     dot,
     quantize,
 )
-from etl_spark.operators.caching import session_cached
+from etl_spark.operators.caching import session_cached, session_memo
 from etl_spark.plans.registry import register
 
 K_CLUSTERS = 8
 MAX_ITERS = 8
 
-# Target rows per task for the quantized-embedding Arrow kernels. The
-# kernels are skinny numpy matmuls (rows × DIM @ DIM × k), so a task's
-# compute at this size is milliseconds — the constant exists to stop
-# TASK-COUNT overhead from dominating, not to bound memory (16k rows ×
-# 64 dims × 8 B ≈ 8 MB per task). r10 measurement (guide §2.2 "fewer,
-# larger map tasks" / §1.2): the flat repartition(defaultParallelism)
-# put sf0.1's 2,000 vectors in 32 partitions, so every Lloyd iteration
-# paid 32 task launches + 32-block exchanges to do ~2 ms of math —
-# ml_kmeans_lloyd spent ~1 s/iteration on scheduler overhead. Deriving
-# the partition count from the corpus size (ceil(rows / target),
-# uncapped above so a real corpus still fans out linearly) is the
-# scale-adaptive form the optimization guide asks for.
-EMB_ROWS_PER_PARTITION = 16384
-
-def _emb_partitions(spark: SparkSession, sf_dir: str) -> int:
-    from etl_spark.io import adaptive_partitions
-
-    return adaptive_partitions(
-        spark, sf_dir, "embeddings", EMB_ROWS_PER_PARTITION
-    )
-
-
 def _quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embeddings as exact-integer vectors, in size-derived partitions."""
     return (
         load(spark, sf_dir, "embeddings")
-        .repartition(_emb_partitions(spark, sf_dir))
+        .repartition(_sim_partitions(spark, sf_dir))
         .select("vec_id", quantize(F.col("embedding")).alias("q"))
     )
 
@@ -229,7 +208,7 @@ def _cluster_stats(assigned: DataFrame, exact: bool) -> DataFrame:
         "so assignment is one corpus scan with a numpy matmul per "
         "Arrow batch — no join, no per-pair lambdas; the only shuffle "
         "is the k-row stats aggregate. Distances are exact BIGINTs "
-        "(quantization proof at llm_similarity.py:40-46), so this "
+        "(quantization proof at llm_similarity.quantize), so this "
         "inherently-numeric step is fully oracle-hashable.",
     tags=("ml", "kmeans", "llm", "pandas-udf"),
 )
@@ -562,9 +541,8 @@ def ml_cluster_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Trained coarse quantizer: centroids after exactly ONE Lloyd update from
 # the first-K seeds. Both IVF search and semantic dedup below share it —
-# it is the cheapest quantizer that is genuinely *learned* from the data
-# (the round-3 IVF query used the label column as a stand-in), while
-# staying exact on the integer lattice and therefore oracle-hashable.
+# it is the cheapest quantizer that is genuinely *learned* from the data,
+# while staying exact on the integer lattice and therefore oracle-hashable.
 # ---------------------------------------------------------------------------
 
 N_PROBE = 2
@@ -573,43 +551,32 @@ N_PROBE = 2
 # prove the result is block-size-invariant.
 PAIR_BLOCK_ROWS = 1024
 
-#: Session memo of the one-step-trained coarse quantizer's centroids
-#: (k × dim lattice ints — config-sized driver state, same class as
-#: lakehouse._VTABLE_CACHE). Three registered queries train the
-#: IDENTICAL quantizer (first-K seeds over _quantized, deterministic
-#: collect order), so before r10 each one re-ran the seed collect +
-#: assignment scan + k×dim update (≈2 corpus passes apiece).
-_TRAINED_CENTS: dict = {}
-
-
 def trained_centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
-    """The session's first-K one-Lloyd-step coarse quantizer (memoized
-    per (session, sf_dir); always recomputed from parquet in a fresh
-    process)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cents = _TRAINED_CENTS.get(key)
-    if cents is None:
+    """The session's first-K one-Lloyd-step coarse quantizer (k × dim
+    lattice ints). Three registered queries train this identical
+    quantizer (first-K seeds over _quantized, deterministic collect
+    order), so it is a ``session_memo`` per (session, sf_dir); a fresh
+    process always recomputes it from parquet."""
+
+    def build() -> list[list[float]]:
         emb = _quantized(spark, sf_dir)
         # Two bounded passes share the scan (seed collect + update).
         emb.persist()
         try:
-            cents = _one_step_centroids(emb)
+            return _one_step_centroids(emb)
         finally:
             emb.unpersist()
-        while len(_TRAINED_CENTS) >= 8:
-            _TRAINED_CENTS.pop(next(iter(_TRAINED_CENTS)))
-        _TRAINED_CENTS[key] = cents
+
+    cents = session_memo("ivf_centroids", spark, sf_dir, build)
     return [list(c) for c in cents]
 
 
 def cached_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached (vec_id, q, cluster) under the session-trained
-    coarse quantizer (r10 opt, guide §1.2 "don't compute things you
-    throw away"): the IVF probe, the IVF-PQ search/rerank pair and the
-    semantic dedup all consume this identical assignment, and each
-    used to re-run the training passes plus its own Arrow assignment
-    scan. One materialization serves them all; a bench clearCache()
-    unpersists it and the next consumer rebuilds from parquet."""
+    coarse quantizer: the IVF probe, the IVF-PQ search/rerank pair and
+    the semantic dedup all consume this identical assignment, so one
+    materialization serves them all; a bench clearCache() unpersists
+    it and the next consumer rebuilds from parquet."""
 
     def build() -> DataFrame:
         return _assign(
@@ -1182,7 +1149,7 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
         ids = pdf["vec_id"].to_numpy()
         Q = np.array(pdf["q"].tolist(), dtype=np.float64)
         # Exact: integer-valued sums below 2^53 (quantization proof
-        # at llm_similarity.py:40-46).
+        # at llm_similarity.quantize).
         norms = (Q * Q).sum(axis=1)
         col = np.arange(len(ids))
         out = []

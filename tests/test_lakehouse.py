@@ -339,24 +339,37 @@ def test_incremental_refresh_every_hop_matches_recompute(spark):
 
 
 def test_vtable_rebuild_never_deletes_a_live_readers_files(spark):
-    """ADVICE r9 (lakehouse.py _built_vtable): the builder used to
-    rmtree the deterministic /tmp dir before rebuilding, so a rebuild
-    after FIFO eviction could delete files a previously returned LAZY
-    frame still references, failing its jobs mid-read. Each build now
-    gets a fresh unique directory: evict, rebuild, then collect the
-    OLD frame — it must still read its own files."""
+    """A rebuild after eviction must not delete files a previously
+    returned LAZY frame still references: each build gets a fresh
+    unique directory. Evict, rebuild, then collect the OLD frame — it
+    must still read its own files."""
     from etl_spark.etl.versioned import read_versioned_table
-    from etl_spark.plans.lakehouse import _VTABLE_CACHE, _built_vtable
+    from etl_spark.operators.caching import evict_session_memos
+    from etl_spark.plans.lakehouse import _built_table
     from tests.conftest import SF_DIR
 
-    t1 = _built_vtable(spark, SF_DIR)
+    t1 = _built_table(spark, SF_DIR, "vtable")
     old_frame = read_versioned_table(spark, t1)  # lazy, files on disk
     n_before = old_frame.count()
 
-    _VTABLE_CACHE.clear()  # simulate FIFO eviction / xdist churn
-    t2 = _built_vtable(spark, SF_DIR)
+    evict_session_memos()
+    t2 = _built_table(spark, SF_DIR, "vtable")
     assert t2 != t1, "rebuild must land in a fresh directory"
 
     # the old lazy frame still reads — its files were not rmtree'd
     assert old_frame.count() == n_before
     assert read_versioned_table(spark, t2).count() == n_before
+
+
+def test_commit_seq_table_is_rebuilt_after_memo_eviction(spark):
+    """evict_session_memos() must drop every built table, the
+    commit-seq flavour included: the next build after an eviction
+    lands in a new directory instead of reusing the memoized one."""
+    from etl_spark.operators.caching import evict_session_memos
+    from etl_spark.plans.lakehouse import _built_table
+    from tests.conftest import SF_DIR
+
+    t1 = _built_table(spark, SF_DIR, "seqtable")
+    assert _built_table(spark, SF_DIR, "seqtable") == t1  # memoized
+    evict_session_memos()
+    assert _built_table(spark, SF_DIR, "seqtable") != t1

@@ -227,38 +227,35 @@ def test_embed_index_partitions_corpus_and_absorbs_dups(spark):
 
 
 def test_quantized_partitions_scale_with_corpus(spark):
-    """r10: the embedding kernels' partition count derives from the
-    corpus size (ceil(rows / EMB_ROWS_PER_PARTITION), floor 1) instead
-    of a flat defaultParallelism — at the test scales that is ONE
+    """The embedding kernels' partition count derives from the corpus
+    size (ceil(rows / EMB_ROWS_PER_PARTITION), floor 1) instead of a
+    flat defaultParallelism — at the test scales that is ONE
     partition, so a Lloyd iteration pays one task, not 32; at real
     scale the count grows linearly with the corpus."""
     import math
 
-    from etl_spark.plans.ml import (
+    from etl_spark.io import adaptive_partitions, load
+    from etl_spark.operators.caching import session_memo
+    from etl_spark.plans.llm_similarity import (
         EMB_ROWS_PER_PARTITION,
-        _emb_partitions,
-        _quantized,
+        _sim_partitions,
     )
-    from etl_spark.io import load
+    from etl_spark.plans.ml import _quantized
 
     n = load(spark, SF_DIR, "embeddings").count()
     want = max(1, math.ceil(n / EMB_ROWS_PER_PARTITION))
-    assert _emb_partitions(spark, SF_DIR) == want
+    assert _sim_partitions(spark, SF_DIR) == want
     assert _quantized(spark, SF_DIR).rdd.getNumPartitions() == want
     # The heuristic never collapses a real corpus onto one task:
     # exercise adaptive_partitions itself with a seeded large row
-    # count (the memo keyed on (app, dir, table) makes this hermetic).
-    from etl_spark import io as eio
-    from etl_spark.io import adaptive_partitions
-
-    key = (spark.sparkContext.applicationId, "/nonexistent/sf-big", "embeddings")
-    eio._ROW_COUNTS[key] = EMB_ROWS_PER_PARTITION * 50
-    try:
-        assert (
-            adaptive_partitions(
-                spark, "/nonexistent/sf-big", "embeddings", EMB_ROWS_PER_PARTITION
-            )
-            == 50
-        )
-    finally:
-        eio._ROW_COUNTS.pop(key, None)
+    # count (the memo keyed on (session, dir, table) makes this
+    # hermetic).
+    big = "/nonexistent/sf-big"
+    session_memo(
+        "row_counts", spark, (big, "embeddings"),
+        lambda: EMB_ROWS_PER_PARTITION * 50,
+    )
+    assert (
+        adaptive_partitions(spark, big, "embeddings", EMB_ROWS_PER_PARTITION)
+        == 50
+    )

@@ -158,22 +158,63 @@ def test_session_cache_evict_unknown_name_raises(spark):
     evict()  # idempotent on empty caches
 
 
-def test_evict_session_memos_clears_trained_state():
-    # r11 verdict item 4: the driver-side Python memos (trained
-    # models, centroids, vtables) survive spark.catalog.clearCache(),
-    # so bench harnesses must have a hook that evicts them between
-    # reps — otherwise warm reps silently exclude training.
-    from etl_spark.operators.caching import evict_session_memos
-    from etl_spark.plans import bpe, lakehouse, ml, ml_train
+def test_evict_session_memos_clears_trained_state(spark):
+    # The driver-side Python memos (trained models, centroids, built
+    # tables, row counts) survive spark.catalog.clearCache(), so bench
+    # harnesses must have a hook that evicts them between reps —
+    # otherwise warm reps silently exclude training.
+    from etl_spark.operators import caching
+    from etl_spark.operators.caching import evict_session_memos, session_memo
 
-    ml._TRAINED_CENTS["probe"] = [[1]]
-    ml_train._TRAIN_CACHE["probe"] = ([(0, 0.0)], 1)
-    bpe._LEARN_CACHE["probe"] = ([], [])
-    lakehouse._VTABLE_CACHE["probe"] = object()
-    lakehouse._DVTABLE_CACHE["probe"] = object()
+    for name in ("ivf_centroids", "logreg_train", "lakehouse_seqtable"):
+        session_memo(name, spark, "/hygiene-memo", lambda: [[1]])
+    assert caching._MEMOS
     evict_session_memos()
-    assert not ml._TRAINED_CENTS
-    assert not ml_train._TRAIN_CACHE
-    assert not bpe._LEARN_CACHE
-    assert not lakehouse._VTABLE_CACHE
-    assert not lakehouse._DVTABLE_CACHE
+    assert not caching._MEMOS
+
+
+def test_session_memo_reuses_and_drops_oldest(spark):
+    from etl_spark.operators import caching
+    from etl_spark.operators.caching import session_memo
+
+    calls = []
+
+    def build(k):
+        def run():
+            calls.append(k)
+            return [k]
+
+        return run
+
+    first = session_memo("hygiene_memo", spark, 0, build(0))
+    assert session_memo("hygiene_memo", spark, 0, build(0)) is first
+    assert calls == [0]  # a repeat key never calls build
+    for k in range(1, 9):  # the 9th distinct key drops the oldest
+        session_memo("hygiene_memo", spark, k, build(k))
+    keys = [key for _, key in caching._MEMOS["hygiene_memo"]]
+    assert keys == list(range(1, 9))
+    session_memo("hygiene_memo", spark, 0, build(0))
+    assert calls == list(range(9)) + [0]  # key 0 was rebuilt
+    caching._MEMOS.pop("hygiene_memo")
+
+
+def test_no_hand_rolled_session_memos():
+    """Every per-session memo keys on the session's applicationId, so
+    a module reading it outside operators/caching.py is building its
+    own memo — its dict, cap and eviction would be invisible to
+    evict_session_memos(). Use session_memo / session_cached."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "etl_spark"
+    offenders = [
+        f"{path.relative_to(pkg)}:{node.lineno}"
+        for path in sorted(pkg.rglob("*.py"))
+        if str(path.relative_to(pkg)) != "operators/caching.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Attribute) and node.attr == "applicationId"
+    ]
+    assert not offenders, (
+        "applicationId read outside operators/caching.py — use "
+        "session_memo:\n" + "\n".join(offenders)
+    )

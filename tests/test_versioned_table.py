@@ -179,7 +179,7 @@ def test_time_travel_checksums_survive_vacuum(spark):
     import pytest
 
     from etl_spark.plans.lakehouse import (
-        _built_vtable,
+        _built_table,
         lakehouse_time_travel_checksums,
     )
     from tests.conftest import SF_DIR
@@ -191,7 +191,7 @@ def test_time_travel_checksums_survive_vacuum(spark):
     assert sorted(before) == [0, 1, 2]
     assert len(set(before.values())) == 3  # each commit changed content
 
-    table = _built_vtable(spark, SF_DIR)
+    table = _built_table(spark, SF_DIR, "vtable")
     removed = vacuum_versioned_table(table, keep_versions=1)
     assert removed  # something below the horizon actually went away
 
@@ -220,9 +220,9 @@ def test_time_travel_checksums_survive_vacuum(spark):
         read_versioned_table(spark, table, version=0).collect()
     # rebuild for any later consumer in this session: the cached table
     # is now vacuumed; drop the memo so the next build starts fresh
-    from etl_spark.plans.lakehouse import _VTABLE_CACHE
+    from etl_spark.operators.caching import evict_session_memos
 
-    _VTABLE_CACHE.clear()
+    evict_session_memos()
 
 
 def test_equality_delete_merge_on_read(spark, tmp_path):
@@ -569,7 +569,7 @@ def test_registered_dv_lifecycle_is_nonvacuous(spark):
 
     from etl_spark.etl.versioned import read_versioned_table
     from etl_spark.plans.lakehouse import (
-        _built_dv_table,
+        _built_table,
         lakehouse_equality_delete_checksums,
     )
     from tests.conftest import SF_DIR
@@ -582,7 +582,7 @@ def test_registered_dv_lifecycle_is_nonvacuous(spark):
     assert rows[2] < rows[1]  # the delete really removed rows
     assert rows[4] == rows[3]  # compaction is content-identical
 
-    table = _built_dv_table(spark, SF_DIR)
+    table = _built_table(spark, SF_DIR, "dvtable")
 
     def error_keys(v):
         return {
@@ -610,8 +610,7 @@ def test_commit_seq_lifecycle_differs_from_ts_flavor_nonvacuously(spark):
     from pyspark.sql import functions as F
 
     from etl_spark.plans.lakehouse import (
-        _built_dv_table,
-        _built_seq_table,
+        _built_table,
         lakehouse_commit_seq_delete_checksums,
     )
     from tests.conftest import SF_DIR
@@ -635,8 +634,8 @@ def test_commit_seq_lifecycle_differs_from_ts_flavor_nonvacuously(spark):
             .collect()
         }
 
-    seq_table = _built_seq_table(spark, SF_DIR)
-    ts_table = _built_dv_table(spark, SF_DIR)
+    seq_table = _built_table(spark, SF_DIR, "seqtable")
+    ts_table = _built_table(spark, SF_DIR, "dvtable")
     # both lifecycles deleted the same keys at v2
     assert error_keys(seq_table, 2) == set() == error_keys(ts_table, 2)
     back_seq = error_keys(seq_table, 3)
