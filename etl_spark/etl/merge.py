@@ -32,17 +32,12 @@ read nor written (fenced by the untouched-bucket-mtime test).
 
 from __future__ import annotations
 
-import glob
 import pathlib
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from etl_spark.etl.pipeline import (
-    load_workflow_runs,
-    snapshot_latest,
-    to_records,
-)
+from etl_spark.etl.pipeline import read_runs, snapshot_latest, to_records
 
 # Bucket count for the materialized snapshot table. Small here so the
 # tests exercise multi-bucket layouts; at scale this is sized so one
@@ -97,16 +92,10 @@ def load_extraction(
 ) -> DataFrame:
     """Record rows of ONE ``<ts>`` extraction across all repos — the
     merge's batch side. The glob targets the ts directory, so only the
-    new partition's files are even LISTED (file-level pruning; the
-    full-zone scan in load_workflow_runs never runs)."""
-    runs = load_workflow_runs(spark, workflows_dir)
-    if not glob.glob(str(workflows_dir / "*" / extract_ts / "runs" / "*.json")):
-        return to_records(runs).filter(F.lit(False))
-    # Reuse the shared reader for schema + path-column parity, then
-    # prune: with one <ts> the filter is on a path-derived column, so
-    # pushdown happens at planning (input_file_name regexp), and the
-    # extraction is small by definition — the batch side of the merge.
-    return to_records(runs.filter(F.col("extract_ts") == extract_ts))
+    new partition's files are listed and read."""
+    return to_records(
+        read_runs(spark, workflows_dir / "*" / extract_ts / "runs" / "*.json")
+    )
 
 
 def _bucketed(records: DataFrame) -> DataFrame:

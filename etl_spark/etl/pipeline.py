@@ -85,7 +85,15 @@ def load_workflow_runs(spark: SparkSession, workflows_dir: pathlib.Path) -> Data
     columns recovered from the file path; ordering becomes a logical
     concern (window in snapshot_latest, orderBy at export).
     """
-    pattern = str(workflows_dir / "*" / "*" / "runs" / "*.json")
+    return read_runs(spark, workflows_dir / "*" / "*" / "runs" / "*.json")
+
+
+def read_runs(spark: SparkSession, pattern: pathlib.Path) -> DataFrame:
+    """Run rows of the files matching ``<zone>/<repo>/<ts>/runs/*.json``
+    glob ``pattern``, with repo_dir/extract_ts/file_id recovered from
+    each file's path. Only matching files are listed and read; no
+    match gives an empty frame with the same columns."""
+    pattern = str(pattern)
     if not glob.glob(pattern):
         # Build from a COPY of the fields: StructType.add mutates in
         # place and would permanently pollute the module-level schema.

@@ -2,15 +2,25 @@
 
 Rich pipelines decode image/audio/video payloads with native libs
 (PIL, ffmpeg, torchaudio). Those libs are NOT in this container, but
-the stdlib can genuinely parse three formats — ``wave`` (RIFF/WAVE
-PCM audio), ``zlib`` (DEFLATE), and uncompressed 24-bit BMP (pure
-``struct`` header walk + bottom-up padded pixel rows; no imaging lib
-needed) — so ``decode_payload`` genuinely decodes those container
-formats, dispatched on magic bytes, and falls back to
-``fake_features`` (a deterministic byte-math stand-in with the same
-Spark surface) for everything else. A user with PIL/ffmpeg adds their
-branch to the same dispatch; the Arrow batching, 1:N frame shape and
-no-payload-shuffle plumbing are format-independent.
+the stdlib can genuinely parse ``wave`` (RIFF/WAVE PCM audio), ``zlib``
+(DEFLATE), uncompressed 24-bit BMP (``struct`` header walk + bottom-up
+padded pixel rows), 8-bit grayscale PNG (chunk walk + inflate + filter
+reconstruction) and GIF89a (block walk + LZW) — so ``decode_payload``
+genuinely decodes those container formats, dispatched on magic bytes,
+and falls back to ``fake_features`` (a deterministic byte-math
+stand-in with the same Spark surface) for everything else. A user with
+PIL/ffmpeg adds their branch to the same dispatch; the Arrow batching,
+1:N frame shape and no-payload-shuffle plumbing are format-independent.
+
+Worker contract: this module registers itself with PySpark's
+cloudpickle for pickling BY VALUE. Every ``mapInPandas`` stage below
+ships its closure together with the module-level codecs it calls, so
+Python workers never import ``etl_spark`` (the driver may run from any
+cwd, with the repo on no worker's path). Each codec is therefore
+defined once and shared by the driver-side ``build_*``/``decode_*``
+functions and the worker stages; module-level names a stage uses must
+stay picklable (functions, constants, numpy arrays — no open handles
+or Spark objects).
 
 Scale notes: this is a narrow map (no shuffle); batch size is governed
 by spark.sql.execution.arrow.maxRecordsPerBatch, and the iterator form
@@ -23,14 +33,18 @@ from __future__ import annotations
 import hashlib
 import io
 import struct
+import sys
 import wave
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 FEATURE_SCHEMA = (
     "doc_id bigint, n_bytes int, n_frames int, frame_signature string, "
@@ -61,7 +75,7 @@ def sniff_mime(payload: bytes) -> str:
     # BMP: 'BM' is a weak magic (any text starting "BM" matches), so
     # require the full header story to hold — declared file size ==
     # actual, pixel offset past both headers, BITMAPINFOHEADER (40),
-    # AND the shape decode_bmp actually parses (24 bpp, BI_RGB
+    # AND the shape bmp_gray actually parses (24 bpp, BI_RGB
     # uncompressed) — before claiming the payload is an image. The
     # sniff and the decoder must agree: a valid-but-unsupported BMP
     # (32 bpp, RLE) must fall to the byte-math path, not crash decode.
@@ -83,13 +97,13 @@ def sniff_mime(payload: bytes) -> str:
     # actually inflating and falls back on zlib.error rather than
     # trusting the sniff.
     # PNG: 8-byte signature is a true magic; additionally require the
-    # shape decode_png parses (IHDR first chunk, 8-bit grayscale,
+    # shape png_gray parses (IHDR first chunk, 8-bit grayscale,
     # deflate, filter method 0, non-interlaced) — sniff and decoder
     # must agree on supported shapes (the BMP lesson): a valid-but-
     # unsupported PNG (16-bit, RGBA, Adam7) falls to byte-math.
     if (
         len(payload) >= 33
-        and payload[:8] == b"\x89PNG\r\n\x1a\n"
+        and payload[:8] == _PNG_MAGIC
         and payload[8:16] == b"\x00\x00\x00\x0dIHDR"
         and payload[24:29] == bytes((8, 0, 0, 0, 0))
     ):
@@ -110,8 +124,6 @@ def pcm_mean(pcm: bytes, sample_width: int) -> float:
         return 0.0
     if sample_width == 1:
         return sum(pcm) / len(pcm)  # 8-bit WAV PCM is unsigned
-    import struct
-
     n = len(pcm) // sample_width
     if sample_width == 2:
         vals = struct.unpack(f"<{n}h", pcm[: n * 2])
@@ -125,104 +137,87 @@ def pcm_mean(pcm: bytes, sample_width: int) -> float:
     return sum(vals) / n
 
 
+def decode_wav(payload: bytes) -> dict:
+    """Decode summary of a RIFF/WAVE container via the stdlib ``wave``
+    codec: header fields, PCM frame count, mean decoded sample and the
+    md5 of the raw PCM. A corrupt container fails LOUDLY."""
+    with wave.open(io.BytesIO(payload), "rb") as w:
+        n = w.getnframes()
+        pcm = w.readframes(n)
+        return {
+            "mime": "audio/wav",
+            "n_channels": w.getnchannels(),
+            "sample_rate": w.getframerate(),
+            "sample_width": w.getsampwidth(),
+            "n_samples": n,
+            "mean_sample": pcm_mean(pcm, w.getsampwidth()),
+            "pcm_md5": hashlib.md5(pcm).hexdigest(),
+        }
+
+
 def decode_payload(payload: bytes) -> dict:
     """Decode a media payload: REAL codec where the stdlib has one
-    (WAV via ``wave``, DEFLATE via ``zlib``), deterministic byte-math
-    stand-in otherwise. Returns a tagged dict; a corrupt payload that
-    carries a true container magic (RIFF/WAVE) fails LOUDLY — silent
-    fallback would mislabel broken audio as opaque bytes."""
+    (WAV via ``wave``, DEFLATE via ``zlib``, BMP/PNG rasters),
+    deterministic byte-math stand-in otherwise. Returns a tagged dict;
+    a corrupt payload that carries a true container magic (RIFF/WAVE)
+    fails LOUDLY — silent fallback would mislabel broken audio as
+    opaque bytes."""
     payload = bytes(payload)
     mime = sniff_mime(payload)
     if mime == "audio/wav":
-        with wave.open(io.BytesIO(payload), "rb") as w:
-            n = w.getnframes()
-            pcm = w.readframes(n)
-            return {
-                "mime": mime,
-                "n_channels": w.getnchannels(),
-                "sample_rate": w.getframerate(),
-                "sample_width": w.getsampwidth(),
-                "n_samples": n,
-                "mean_sample": pcm_mean(pcm, w.getsampwidth()),
-                "pcm_md5": hashlib.md5(pcm).hexdigest(),
-            }
-    if mime == "image/bmp":
-        return decode_bmp(payload)
-    if mime == "image/png":
-        return decode_png(payload)
+        return decode_wav(payload)
+    if mime in ("image/bmp", "image/png"):
+        return decode_raster(payload)
     if mime == "application/zlib":
-        try:
-            raw = zlib.decompress(payload)
-        except zlib.error:
-            pass  # sniff false-positive (no real magic) — treat as bytes
-        else:
-            return {
-                "mime": mime,
-                "decoded_bytes": len(raw),
-                "decoded_md5": hashlib.md5(raw).hexdigest(),
-            }
-    n_bytes, n_frames, signature, mean_byte = fake_features(payload)
-    return {
-        "mime": "application/octet-stream",
-        "n_bytes": n_bytes,
-        "n_frames": n_frames,
-        "frame_signature": signature,
-        "mean_byte": mean_byte,
-    }
+        summary = _inflate_summary(payload)
+        if summary["mime"] == mime:  # else a sniff false-positive
+            return summary
+    return {"mime": "application/octet-stream", **fake_features(payload)}
 
 
-def fake_features(payload: bytes) -> tuple[int, int, str, float]:
+def fake_features(payload: bytes) -> dict:
     """Deterministic stand-in for decode+feature-extract.
 
     'Frames' are 256-byte chunks; the signature is the md5 of every
     64th byte; mean_byte is an exact integer-ratio double.
     """
     n_bytes = len(payload)
-    n_frames = n_bytes // 256 + 1
-    sampled = payload[::64]
-    signature = hashlib.md5(sampled).hexdigest()
-    mean_byte = (sum(payload) / n_bytes) if n_bytes else 0.0
-    return n_bytes, n_frames, signature, mean_byte
+    return {
+        "n_bytes": n_bytes,
+        "n_frames": n_bytes // 256 + 1,
+        "frame_signature": hashlib.md5(payload[::64]).hexdigest(),
+        "mean_byte": (sum(payload) / n_bytes) if n_bytes else 0.0,
+    }
 
 
-def extract_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """documents-with-payload → per-doc feature rows via mapInPandas."""
+def _payload_summaries(
+    df: DataFrame, payload_col: str, decode: Callable[[bytes], dict], schema: str
+) -> DataFrame:
+    """Narrow map: one ``decode(payload)`` summary per non-NULL
+    payload, keyed by doc_id; ``schema`` names the summary fields kept
+    (dict keys not in it are dropped). A NULL payload has nothing to
+    decode and is skipped (an empty payload b"" is decoded normally)."""
+    fields = [f.split()[0] for f in schema.split(",")][1:]
 
-    # Self-contained closure: no references to module-level symbols, so
-    # cloudpickle ships it by value and workers need no etl_spark on
-    # their PYTHONPATH (the driver process may run from any cwd).
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
-
-        import pandas as _pd
-
-        def _feats(payload: bytes) -> tuple[int, int, str, float]:
-            n_bytes = len(payload)
-            n_frames = n_bytes // 256 + 1
-            signature = _hashlib.md5(payload[::64]).hexdigest()
-            mean_byte = (sum(payload) / n_bytes) if n_bytes else 0.0
-            return n_bytes, n_frames, signature, mean_byte
-
         for pdf in it:
-            feats = [_feats(p) for p in pdf[payload_col]]
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "n_bytes": [f[0] for f in feats],
-                    "n_frames": [f[1] for f in feats],
-                    "frame_signature": [f[2] for f in feats],
-                    "mean_byte": [f[3] for f in feats],
-                }
+            out = pd.DataFrame(
+                [decode(bytes(p)) for p in pdf[payload_col]], columns=fields
             )
+            out.insert(0, "doc_id", pdf["doc_id"].values)
+            yield out
 
-    # A NULL payload has nothing to decode — skip it (empty payloads
-    # b"" are decoded normally). Without this, `len(None)` would kill
-    # the whole task on the first row with a missing payload.
     return (
         df.select("doc_id", payload_col)
         .where(F.col(payload_col).isNotNull())
-        .mapInPandas(batches, schema=FEATURE_SCHEMA)
+        .mapInPandas(batches, schema=schema)
     )
+
+
+def extract_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+    """documents-with-payload → per-doc ``fake_features`` rows via
+    mapInPandas."""
+    return _payload_summaries(df, payload_col, fake_features, FEATURE_SCHEMA)
 
 
 def with_payload(docs: DataFrame) -> DataFrame:
@@ -260,10 +255,6 @@ def sample_frames(
     """
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
-
-        import pandas as _pd
-
         for pdf in it:
             ids, idxs, sizes, md5s = [], [], [], []
             for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
@@ -274,17 +265,17 @@ def sample_frames(
                     ids.append(doc_id)
                     idxs.append(idx)
                     sizes.append(len(frame))
-                    md5s.append(_hashlib.md5(frame).hexdigest())
-            yield _pd.DataFrame(
+                    md5s.append(hashlib.md5(frame).hexdigest())
+            yield pd.DataFrame(
                 {
-                    "doc_id": _pd.Series(ids, dtype="int64"),
-                    "frame_idx": _pd.Series(idxs, dtype="int32"),
-                    "frame_bytes": _pd.Series(sizes, dtype="int32"),
-                    "frame_md5": _pd.Series(md5s, dtype="object"),
+                    "doc_id": pd.Series(ids, dtype="int64"),
+                    "frame_idx": pd.Series(idxs, dtype="int32"),
+                    "frame_bytes": pd.Series(sizes, dtype="int32"),
+                    "frame_md5": pd.Series(md5s, dtype="object"),
                 }
             )
 
-    # NULL payloads: nothing to frame — skip (see extract_features).
+    # NULL payloads: nothing to frame — skip (see _payload_summaries).
     return (
         df.select("doc_id", payload_col)
         .where(F.col(payload_col).isNotNull())
@@ -309,35 +300,15 @@ def resize_payload(
     transform with the exact batch shape a real resize has (binary in,
     binary-derived features out, constant output size)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
+    def resized(payload: bytes) -> dict:
+        out = payload[:target_bytes].ljust(target_bytes, b"\x00")
+        return {
+            "orig_bytes": len(payload),
+            "new_bytes": target_bytes,
+            "resized_md5": hashlib.md5(out).hexdigest(),
+        }
 
-        import pandas as _pd
-
-        for pdf in it:
-            orig, md5s = [], []
-            for payload in pdf[payload_col]:
-                payload = bytes(payload)
-                orig.append(len(payload))
-                resized = payload[:target_bytes].ljust(target_bytes, b"\x00")
-                md5s.append(_hashlib.md5(resized).hexdigest())
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "orig_bytes": _pd.Series(orig, dtype="int32"),
-                    "new_bytes": _pd.Series(
-                        [target_bytes] * len(orig), dtype="int32"
-                    ),
-                    "resized_md5": _pd.Series(md5s, dtype="object"),
-                }
-            )
-
-    # NULL payloads: nothing to resize — skip (see extract_features).
-    return (
-        df.select("doc_id", payload_col)
-        .where(F.col(payload_col).isNotNull())
-        .mapInPandas(batches, schema=RESIZE_SCHEMA)
-    )
+    return _payload_summaries(df, payload_col, resized, RESIZE_SCHEMA)
 
 
 WAV_DECODE_SCHEMA = (
@@ -348,78 +319,12 @@ WAV_DECODE_SCHEMA = (
 
 def decode_audio(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """REAL audio decode stage: payloads are genuine RIFF/WAVE
-    containers (see ``build_wav``), parsed on the workers by the
-    stdlib ``wave`` codec — header walk, fmt-chunk fields, PCM frame
+    containers (see ``build_wav``), parsed on the workers by
+    ``decode_wav`` — header walk, fmt-chunk fields, PCM frame
     extraction. Narrow map, one container decoded per row, Arrow
     batch in/out; the exact stage shape a torchaudio-backed pipeline
     has, with a real (if humble) codec in the decode slot."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
-        import io as _io
-        import struct as _struct
-        import wave as _wave
-
-        import pandas as _pd
-
-        def _mean(pcm: bytes, width: int) -> float:
-            # Self-contained twin of pcm_mean (workers can't import
-            # etl_spark); the driver-vs-worker parity test pins them.
-            if not pcm:
-                return 0.0
-            if width == 1:
-                return sum(pcm) / len(pcm)
-            n = len(pcm) // width
-            if width == 2:
-                vals = _struct.unpack(f"<{n}h", pcm[: n * 2])
-            elif width == 4:
-                vals = _struct.unpack(f"<{n}i", pcm[: n * 4])
-            else:
-                vals = [
-                    int.from_bytes(pcm[i : i + 3], "little", signed=True)
-                    for i in range(0, n * 3, 3)
-                ]
-            return sum(vals) / n
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                with _wave.open(_io.BytesIO(bytes(payload)), "rb") as w:
-                    n = w.getnframes()
-                    pcm = w.readframes(n)
-                    channels = w.getnchannels()
-                    rate = w.getframerate()
-                    width = w.getsampwidth()
-                rows.append(
-                    (
-                        doc_id,
-                        "audio/wav",
-                        channels,
-                        rate,
-                        n,
-                        _mean(pcm, width),
-                        _hashlib.md5(pcm).hexdigest(),
-                    )
-                )
-            yield _pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "mime", "n_channels", "sample_rate",
-                    "n_samples", "mean_sample", "pcm_md5",
-                ],
-            ).astype(
-                {
-                    "doc_id": "int64", "n_channels": "int32",
-                    "sample_rate": "int32", "n_samples": "int64",
-                    "mean_sample": "float64",
-                }
-            )
-
-    return (
-        df.select("doc_id", payload_col)
-        .where(F.col(payload_col).isNotNull())
-        .mapInPandas(batches, schema=WAV_DECODE_SCHEMA)
-    )
+    return _payload_summaries(df, payload_col, decode_wav, WAV_DECODE_SCHEMA)
 
 
 DEFLATE_DECODE_SCHEMA = (
@@ -427,74 +332,43 @@ DEFLATE_DECODE_SCHEMA = (
 )
 
 
+def _inflate_summary(payload: bytes) -> dict:
+    """Size and md5 of the inflated payload; a payload that does not
+    inflate (no zlib header, or a false-positive sniff) is summarized
+    as its raw bytes under mime application/octet-stream."""
+    raw, mime = payload, "application/octet-stream"
+    if sniff_mime(payload) == "application/zlib":
+        try:
+            raw, mime = zlib.decompress(payload), "application/zlib"
+        except zlib.error:
+            pass  # sniff false-positive: fingerprint the raw bytes
+    return {
+        "mime": mime,
+        "decoded_bytes": len(raw),
+        "decoded_md5": hashlib.md5(raw).hexdigest(),
+    }
+
+
 def decode_deflate(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """REAL decompression decode stage: inflate zlib-DEFLATE payloads
-    on the workers (stdlib zlib, sniffed by the same header check as
-    ``sniff_mime``) and fingerprint the recovered bytes. Non-zlib
-    payloads fall back to raw-byte fingerprinting, mirroring
-    ``decode_payload``'s dispatch. Narrow map; payload never
-    shuffles."""
+    on the workers (stdlib zlib, sniffed by ``sniff_mime``) and
+    fingerprint the recovered bytes. Non-zlib payloads fall back to
+    raw-byte fingerprinting. Narrow map; payload never shuffles."""
+    return _payload_summaries(df, payload_col, _inflate_summary, DEFLATE_DECODE_SCHEMA)
+
+
+def _with_encoded_payload(
+    docs: DataFrame, src: str, encode: Callable[[bytes], bytes], spread: bool
+) -> DataFrame:
+    """Fixture-builder core: (doc_id, payload = encode(utf-8 of src))
+    for every non-NULL ``src``, built in a narrow Arrow map."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
-        import zlib as _zlib
-
-        import pandas as _pd
-
         for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                payload = bytes(payload)
-                raw, mime = None, "application/octet-stream"
-                # Inlined sniff_mime zlib branch (closure stays
-                # self-contained for workers): CMF low nibble 0x8 =
-                # deflate, high nibble <= 7 = any valid window size,
-                # header pair % 31 == 0.
-                if (
-                    len(payload) >= 2
-                    and (payload[0] & 0x0F) == 0x08
-                    and (payload[0] >> 4) <= 7
-                    and (payload[0] << 8 | payload[1]) % 31 == 0
-                ):
-                    try:
-                        raw = _zlib.decompress(payload)
-                        mime = "application/zlib"
-                    except _zlib.error:
-                        raw = None
-                if raw is None:
-                    raw = payload
-                rows.append(
-                    (doc_id, mime, len(raw), _hashlib.md5(raw).hexdigest())
-                )
-            yield _pd.DataFrame(
-                rows,
-                columns=["doc_id", "mime", "decoded_bytes", "decoded_md5"],
-            ).astype({"doc_id": "int64", "decoded_bytes": "int64"})
-
-    return (
-        df.select("doc_id", payload_col)
-        .where(F.col(payload_col).isNotNull())
-        .mapInPandas(batches, schema=DEFLATE_DECODE_SCHEMA)
-    )
-
-
-def with_deflate_payload(docs: DataFrame, src: str = "text", spread: bool = True) -> DataFrame:
-    """Fixture builder: attach a zlib-DEFLATE-compressed payload of
-    the document's utf-8 bytes (stdlib zlib encoder, default level —
-    a genuine compressed stream, not byte math)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import zlib as _zlib
-
-        import pandas as _pd
-
-        for pdf in it:
-            yield _pd.DataFrame(
+            yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"].values,
-                    "payload": [
-                        _zlib.compress(t.encode("utf-8")) for t in pdf[src]
-                    ],
+                    "payload": [encode(t.encode("utf-8")) for t in pdf[src]],
                 }
             )
 
@@ -509,49 +383,35 @@ def with_deflate_payload(docs: DataFrame, src: str = "text", spread: bool = True
     return out.mapInPandas(batches, schema="doc_id bigint, payload binary")
 
 
+def with_deflate_payload(docs: DataFrame, src: str = "text", spread: bool = True) -> DataFrame:
+    """Fixture builder: attach a zlib-DEFLATE-compressed payload of
+    the document's utf-8 bytes (stdlib zlib encoder, default level —
+    a genuine compressed stream, not byte math)."""
+    return _with_encoded_payload(docs, src, zlib.compress, spread)
+
+
 def with_wav_payload(docs: DataFrame, pcm_from: str = "text", spread: bool = True) -> DataFrame:
-    """Fixture builder: attach a real WAV container whose 8-bit mono
-    PCM samples are the document's utf-8 bytes (deterministic, so the
-    decoded features replay in SQL from the text). Container bytes are
-    assembled by the stdlib ``wave`` ENCODER inside the batch — the
-    payload column carries genuine WAV files, not byte math."""
-    _rate = WAV_SAMPLE_RATE  # plain-int local -> pickled by value
+    """Fixture builder: attach a real WAV container (``build_wav``)
+    whose 8-bit mono PCM samples are the document's utf-8 bytes
+    (deterministic, so the decoded features replay in SQL from the
+    text) — the payload column carries genuine WAV files, not byte
+    math."""
+    return _with_encoded_payload(docs, pcm_from, build_wav, spread)
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io as _io
-        import wave as _wave
 
-        import pandas as _pd
-
-        def _wav(pcm: bytes) -> bytes:
-            buf = _io.BytesIO()
-            with _wave.open(buf, "wb") as w:
-                w.setnchannels(1)
-                w.setsampwidth(1)
-                w.setframerate(_rate)  # captured by value: stays
-                # in sync with build_wav without importing etl_spark
-                w.writeframes(pcm)
-            return buf.getvalue()
-
-        for pdf in it:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": [
-                        _wav(t.encode("utf-8")) for t in pdf[pcm_from]
-                    ],
-                }
+def _pcm8_centered(payload: bytes, stage: str) -> np.ndarray:
+    """Centered samples (byte − 128, int64) of an 8-bit PCM WAV
+    payload. Other sample widths fail LOUDLY, not wrong: treating
+    16/24/32-bit PCM bytes as samples would turn interleaved
+    half-words into garbage features (the sniff/decode-agreement
+    lesson applied here)."""
+    with wave.open(io.BytesIO(bytes(payload)), "rb") as w:
+        if w.getsampwidth() != 1:
+            raise ValueError(
+                f"{stage} expects 8-bit PCM, got sample width {w.getsampwidth()}"
             )
-
-    out = docs.select("doc_id", pcm_from).where(F.col(pcm_from).isNotNull())
-    if spread:
-        # Single-file scans plateau decode parallelism (one parquet
-        # file -> one input partition at bench SFs; SCALING.md's sf1
-        # note). Spread the TEXT before payload construction so the
-        # decode map runs on every core while payloads still never
-        # cross an Exchange.
-        out = out.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-    return out.mapInPandas(batches, schema="doc_id bigint, payload binary")
+        pcm = w.readframes(w.getnframes())
+    return np.frombuffer(pcm, dtype=np.uint8).astype(np.int64) - 128
 
 
 # Analysis frame length for audio feature extraction: 160 samples =
@@ -580,58 +440,38 @@ def frame_audio_energy(df: DataFrame, payload_col: str = "payload") -> DataFrame
     only the 5-column feature rows continue. Per-frame math is a
     numpy reshape + einsum over the whole clip, not a Python loop
     per frame."""
-    _FRAME = AUDIO_FRAME  # captured by value; workers can't import us
+
+    cols = ["doc_id", "frame_idx", "frame_n", "frame_sum", "frame_sq"]
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io as _io
-        import wave as _wave
-
-        import numpy as _np
-        import pandas as _pd
-
-        cols = ["doc_id", "frame_idx", "frame_n", "frame_sum", "frame_sq"]
-
         for pdf in it:
             out = []
             for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                with _wave.open(_io.BytesIO(bytes(payload)), "rb") as w:
-                    if w.getsampwidth() != 1:
-                        # Loud, not wrong: treating 16/24/32-bit PCM
-                        # bytes as samples would frame interleaved
-                        # half-words into garbage energies (the BMP
-                        # sniff/decode-agreement lesson applied here).
-                        raise ValueError(
-                            "frame_audio_energy expects 8-bit PCM, got "
-                            f"sample width {w.getsampwidth()}"
-                        )
-                    pcm = w.readframes(w.getnframes())
-                n = len(pcm)
+                s = _pcm8_centered(payload, "frame_audio_energy")
+                n = len(s)
                 if n == 0:
                     continue
-                s = _np.frombuffer(pcm, dtype=_np.uint8).astype(_np.int64) - 128
-                n_frames = -(-n // _FRAME)
-                padded = _np.zeros(n_frames * _FRAME, dtype=_np.int64)
+                n_frames = -(-n // AUDIO_FRAME)
+                padded = np.zeros(n_frames * AUDIO_FRAME, dtype=np.int64)
                 padded[:n] = s  # zero-pad: pads add 0 to sum and sq
-                grid = padded.reshape(n_frames, _FRAME)
-                fsum = grid.sum(axis=1)
-                fsq = _np.einsum("ij,ij->i", grid, grid)
-                fn = _np.full(n_frames, _FRAME, dtype=_np.int64)
-                fn[-1] = n - (n_frames - 1) * _FRAME
+                grid = padded.reshape(n_frames, AUDIO_FRAME)
+                fn = np.full(n_frames, AUDIO_FRAME, dtype=np.int32)
+                fn[-1] = n - (n_frames - 1) * AUDIO_FRAME
                 out.append(
-                    _pd.DataFrame(
+                    pd.DataFrame(
                         {
-                            "doc_id": _np.full(n_frames, doc_id, dtype=_np.int64),
-                            "frame_idx": _np.arange(n_frames, dtype=_np.int32),
-                            "frame_n": fn.astype(_np.int32),
-                            "frame_sum": fsum,
-                            "frame_sq": fsq,
+                            "doc_id": np.full(n_frames, doc_id, dtype=np.int64),
+                            "frame_idx": np.arange(n_frames, dtype=np.int32),
+                            "frame_n": fn,
+                            "frame_sum": grid.sum(axis=1),
+                            "frame_sq": np.einsum("ij,ij->i", grid, grid),
                         }
                     )
                 )
             yield (
-                _pd.concat(out, ignore_index=True)
+                pd.concat(out, ignore_index=True)
                 if out
-                else _pd.DataFrame(columns=cols).astype(
+                else pd.DataFrame(columns=cols).astype(
                     {
                         "doc_id": "int64",
                         "frame_idx": "int32",
@@ -656,7 +496,7 @@ def frame_audio_energy(df: DataFrame, payload_col: str = "payload") -> DataFrame
 
 
 # ---------------------------------------------------------------------------
-# BMP: REAL uncompressed 24-bit bitmap encode/parse, stdlib-only
+# Rasters: REAL BMP / PNG / GIF encode + decode, stdlib + numpy only
 # ---------------------------------------------------------------------------
 
 # Fixture grid width (pixels per row). 24 keeps sf0.01 docs (~200-2000
@@ -669,6 +509,8 @@ BMP_DECODE_SCHEMA = (
     "doc_id bigint, mime string, width int, height int, bpp int, "
     "n_pixels bigint, luma_sum bigint, luma_md5 string"
 )
+
+_PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 
 
 def build_bmp(gray: bytes, width: int = BMP_WIDTH) -> bytes:
@@ -708,17 +550,15 @@ def build_bmp(gray: bytes, width: int = BMP_WIDTH) -> bytes:
     return file_header + info_header + b"".join(rows)
 
 
-def decode_bmp(payload: bytes) -> dict:
+def bmp_gray(payload: bytes) -> tuple[int, int, bytes]:
     """Parse an uncompressed 24-bit BMP: header walk, bottom-up (or
     top-down when biHeight < 0) row un-flip, padding strip, integer
     ITU-R 601 luma per pixel ((299R + 587G + 114B) // 1000 — exact
-    integer math, equal to the byte value on gray pixels). Returns
-    the decode summary; ``luma_md5`` is over the TOP-DOWN row-major
-    luma bytes, the orientation a downstream vision model consumes.
-    Fails LOUDLY on a malformed container (sniff_mime verified the
-    header, so a parse error here is corruption, not a false sniff).
-    """
-    magic, file_size, _, _, offset = struct.unpack_from("<2sIHHI", payload, 0)
+    integer math, equal to the byte value on gray pixels) as numpy
+    array ops. Returns (width, height, TOP-DOWN row-major luma bytes),
+    the orientation a downstream vision model consumes. Fails LOUDLY
+    on a malformed or unsupported container."""
+    magic, _size, _, _, offset = struct.unpack_from("<2sIHHI", payload, 0)
     (dib_size, width, height, _planes, bpp, compression) = struct.unpack_from(
         "<IiiHHI", payload, 14
     )
@@ -729,24 +569,14 @@ def decode_bmp(payload: bytes) -> dict:
     top_down = height < 0
     height = abs(height)
     row_size = (width * 3 + 3) & ~3
-    luma = bytearray(width * height)
-    for out_y in range(height):
-        src_y = out_y if top_down else height - 1 - out_y
-        base = offset + src_y * row_size
-        row = payload[base : base + width * 3]
-        for x in range(width):
-            b, g, r = row[3 * x], row[3 * x + 1], row[3 * x + 2]
-            luma[out_y * width + x] = (299 * r + 587 * g + 114 * b) // 1000
-    luma = bytes(luma)
-    return {
-        "mime": "image/bmp",
-        "width": width,
-        "height": height,
-        "bpp": bpp,
-        "n_pixels": width * height,
-        "luma_sum": sum(luma),
-        "luma_md5": hashlib.md5(luma).hexdigest(),
-    }
+    px = np.frombuffer(
+        payload, dtype=np.uint8, count=height * row_size, offset=offset
+    ).reshape(height, row_size)[:, : width * 3].reshape(height, width, 3)
+    if not top_down:
+        px = px[::-1]
+    bgr = px.astype(np.int64)
+    luma = (299 * bgr[:, :, 2] + 587 * bgr[:, :, 1] + 114 * bgr[:, :, 0]) // 1000
+    return width, height, luma.astype(np.uint8).tobytes()
 
 
 def _paeth(a: int, b: int, c: int) -> int:
@@ -819,7 +649,7 @@ def build_png(gray: bytes, width: int = BMP_WIDTH) -> bytes:
             )
         prev = row
     return (
-        b"\x89PNG\r\n\x1a\n"
+        _PNG_MAGIC
         + chunk(b"IHDR", ihdr)
         + chunk(b"IDAT", zlib.compress(bytes(raw)))
         + chunk(b"IEND", b"")
@@ -831,7 +661,7 @@ def png_gray(payload: bytes) -> tuple[int, int, bytes]:
     an 8-bit grayscale non-interlaced PNG: (width, height, top-down
     row-major gray bytes). CRCs are verified — a corrupt payload that
     carries the true PNG magic fails LOUDLY, like the WAV branch."""
-    if payload[:8] != b"\x89PNG\r\n\x1a\n":
+    if payload[:8] != _PNG_MAGIC:
         raise ValueError("not a PNG")
     pos = 8
     idat = b""
@@ -908,22 +738,6 @@ def _unfilter_png(raw: bytes, w: int, h: int) -> "np.ndarray":
     return out
 
 
-def decode_png(payload: bytes) -> dict:
-    """Decode summary for an 8-bit grayscale PNG — the compressed-
-    raster sibling of decode_bmp: the gray samples ARE the luminance,
-    so the summary matches decode_bmp's for the same pixel grid."""
-    w, h, gray = png_gray(payload)
-    return {
-        "mime": "image/png",
-        "width": w,
-        "height": h,
-        "bpp": 8,
-        "n_pixels": w * h,
-        "luma_sum": sum(gray),
-        "luma_md5": hashlib.md5(gray).hexdigest(),
-    }
-
-
 def _lzw_encode(data: bytes, min_code: int) -> bytes:
     """GIF-variant LZW (LSB-first variable-width codes, CLEAR/END
     codes, 12-bit cap). The code WIDTH the decoder expects depends on
@@ -995,8 +809,8 @@ def _lzw_encode(data: bytes, min_code: int) -> bytes:
 
 #: Per-min_code base symbol tables, built once — re-allocating 256
 #: singleton bytes per CLEAR dominated decode cost on the small
-#: per-doc payloads the corpus queries feed (round-10 LZW probe:
-#: SCALING.md 'GIF LZW at scale').
+#: per-doc payloads the corpus queries feed (SCALING.md 'GIF LZW at
+#: scale').
 _LZW_BASES: dict[int, list[bytes]] = {}
 
 
@@ -1004,11 +818,10 @@ def _lzw_decode(data: bytes, min_code: int) -> bytes:
     """GIF-variant LZW decoder: variable width LSB-first, CLEAR
     resets, the KwKwK case (code == next entry), 12-bit cap.
 
-    Hot-loop form (measured 1.3-1.4x over the naive loop, the best
-    Python-reachable shape found by the round-10 probe): the base
-    table is copied from a module cache instead of rebuilt per CLEAR,
-    the previous ENTRY rides as bytes (no double table indexing), and
-    the width mask is maintained incrementally."""
+    Hot-loop form: the base table is copied from a module cache
+    instead of rebuilt per CLEAR, the previous ENTRY rides as bytes
+    (no double table indexing), and the width mask is maintained
+    incrementally."""
     clear, end = 1 << min_code, (1 << min_code) + 1
     base = _LZW_BASES.get(min_code)
     if base is None:
@@ -1150,497 +963,78 @@ def gif_gray(payload: bytes) -> tuple[int, int, bytes]:
     raise ValueError("GIF without image data")
 
 
-def decode_gif(payload: bytes) -> dict:
-    """Decode summary for an 8-bit gray GIF — the LZW sibling of
-    decode_png/decode_bmp: same pixel grid, same summary."""
-    w, h, gray = gif_gray(payload)
+def raster_luma(payload: bytes) -> tuple[str, int, int, "np.ndarray"]:
+    """The one raster decoder behind every image stage: dispatch on
+    magic bytes to ``png_gray`` / ``gif_gray`` / ``bmp_gray`` and
+    return (mime, width, height, top-down (h, w) uint8 luma grid).
+    Gray PNG/GIF samples ARE the luma, so the same pixel grid decodes
+    to the same array from every container. Anything else fails
+    LOUDLY — never garbage geometry from a blind header parse."""
+    if payload[:8] == _PNG_MAGIC:
+        mime, (w, h, luma) = "image/png", png_gray(payload)
+    elif payload[:6] in (b"GIF87a", b"GIF89a"):
+        mime, (w, h, luma) = "image/gif", gif_gray(payload)
+    elif payload[:2] == b"BM":
+        mime, (w, h, luma) = "image/bmp", bmp_gray(payload)
+    else:
+        raise ValueError("not a BMP, PNG or GIF payload")
+    return mime, w, h, np.frombuffer(luma, dtype=np.uint8).reshape(h, w)
+
+
+def decode_raster(payload: bytes) -> dict:
+    """Decode summary of a BMP, PNG or GIF payload (``raster_luma``):
+    geometry, container bit depth, and the sum and md5 of the top-down
+    row-major luma bytes — equal across containers holding the same
+    pixel grid."""
+    mime, w, h, luma = raster_luma(payload)
     return {
-        "mime": "image/gif",
+        "mime": mime,
         "width": w,
         "height": h,
-        "bpp": 8,
+        "bpp": 24 if mime == "image/bmp" else 8,
         "n_pixels": w * h,
-        "luma_sum": sum(gray),
-        "luma_md5": hashlib.md5(gray).hexdigest(),
+        "luma_sum": int(luma.sum(dtype=np.int64)),
+        "luma_md5": hashlib.md5(luma.tobytes()).hexdigest(),
     }
 
 
 def with_bmp_payload(docs: DataFrame, src: str = "text", spread: bool = True) -> DataFrame:
-    """Fixture builder: attach a REAL 24-bit BMP whose gray pixel grid
-    is the document's utf-8 bytes, BMP_WIDTH pixels per row (trailing
-    partial row dropped by the encoder). Narrow Arrow map; requires
-    ``length(src) >= BMP_WIDTH`` upstream."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-
-        import pandas as _pd
-
-        _W = BMP_WIDTH
-
-        def _bmp(gray: bytes) -> bytes:
-            # Self-contained twin of build_bmp (workers can't import
-            # etl_spark); tests pin driver-vs-worker byte parity.
-            h = len(gray) // _W
-            gray = gray[: _W * h]
-            pad = (-( _W * 3)) % 4
-            data = ( _W * 3 + pad) * h
-            head = _struct.pack("<2sIHHI", b"BM", 54 + data, 0, 0, 54)
-            dib = _struct.pack(
-                "<IiiHHIIiiII", 40, _W, h, 1, 24, 0, data, 2835, 2835, 0, 0
-            )
-            rows = [
-                b"".join(
-                    bytes((v, v, v)) for v in gray[y * _W : (y + 1) * _W]
-                )
-                + b"\x00" * pad
-                for y in range(h - 1, -1, -1)
-            ]
-            return head + dib + b"".join(rows)
-
-        for pdf in it:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": [
-                        _bmp(t.encode("utf-8")) for t in pdf[src]
-                    ],
-                }
-            )
-
-    out = docs.select("doc_id", src).where(F.col(src).isNotNull())
-    if spread:
-        # Single-file scans plateau decode parallelism (one parquet
-        # file -> one input partition at bench SFs; SCALING.md's sf1
-        # note). Spread the TEXT before payload construction so the
-        # decode map runs on every core while payloads still never
-        # cross an Exchange.
-        out = out.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-    return out.mapInPandas(batches, schema="doc_id bigint, payload binary")
+    """Fixture builder: attach a REAL 24-bit BMP (``build_bmp``) whose
+    gray pixel grid is the document's utf-8 bytes, BMP_WIDTH pixels
+    per row (trailing partial row dropped by the encoder). Narrow
+    Arrow map; requires ``length(src) >= BMP_WIDTH`` upstream."""
+    return _with_encoded_payload(docs, src, build_bmp, spread)
 
 
 def with_png_payload(docs: DataFrame, src: str = "text", spread: bool = True) -> DataFrame:
-    """Fixture builder: attach a REAL 8-bit grayscale PNG whose pixel
-    grid is the document's utf-8 bytes, BMP_WIDTH pixels per row
-    (same grid contract as with_bmp_payload, so the two containers
-    hold the SAME image). Narrow Arrow map; requires
-    ``length(src) >= BMP_WIDTH`` upstream."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-        import zlib as _zlib
-
-        import pandas as _pd
-
-        _W = BMP_WIDTH
-
-        def _png(gray: bytes) -> bytes:
-            # Self-contained twin of build_png (workers can't import
-            # etl_spark); tests pin driver-vs-worker byte parity.
-            h = len(gray) // _W
-            gray = gray[: _W * h]
-
-            def _ck(tag, data):
-                return (
-                    _struct.pack(">I", len(data)) + tag + data
-                    + _struct.pack(">I", _zlib.crc32(tag + data))
-                )
-
-            def _pth(a, b, c):
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                return a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-
-            raw = bytearray()
-            prev = bytes(_W)
-            for y in range(h):
-                row = gray[y * _W : (y + 1) * _W]
-                ft = y % 5
-                raw.append(ft)
-                for x in range(_W):
-                    left = row[x - 1] if x else 0
-                    if ft == 0:
-                        v = row[x]
-                    elif ft == 1:
-                        v = row[x] - left
-                    elif ft == 2:
-                        v = row[x] - prev[x]
-                    elif ft == 3:
-                        v = row[x] - (left + prev[x]) // 2
-                    else:
-                        v = row[x] - _pth(left, prev[x], prev[x - 1] if x else 0)
-                    raw.append(v & 0xFF)
-                prev = row
-            return (
-                b"\x89PNG\r\n\x1a\n"
-                + _ck(b"IHDR", _struct.pack(">IIBBBBB", _W, h, 8, 0, 0, 0, 0))
-                + _ck(b"IDAT", _zlib.compress(bytes(raw)))
-                + _ck(b"IEND", b"")
-            )
-
-        for pdf in it:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": [
-                        _png(t.encode("utf-8")) for t in pdf[src]
-                    ],
-                }
-            )
-
-    out = docs.select("doc_id", src).where(F.col(src).isNotNull())
-    if spread:
-        # Single-file scans plateau decode parallelism (one parquet
-        # file -> one input partition at bench SFs; SCALING.md's sf1
-        # note). Spread the TEXT before payload construction so the
-        # decode map runs on every core while payloads still never
-        # cross an Exchange.
-        out = out.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-    return out.mapInPandas(batches, schema="doc_id bigint, payload binary")
+    """Fixture builder: attach a REAL 8-bit grayscale PNG
+    (``build_png``) whose pixel grid is the document's utf-8 bytes,
+    BMP_WIDTH pixels per row (same grid contract as with_bmp_payload,
+    so the two containers hold the SAME image). Narrow Arrow map;
+    requires ``length(src) >= BMP_WIDTH`` upstream."""
+    return _with_encoded_payload(docs, src, build_png, spread)
 
 
 def with_gif_payload(docs: DataFrame, src: str = "text", spread: bool = True) -> DataFrame:
-    """Fixture builder: attach a REAL GIF89a whose pixel grid is the
-    document's utf-8 bytes (same grid contract as with_bmp_payload /
-    with_png_payload, so all three containers hold the SAME image).
-    The worker closure ships the driver encoder by value (build_gif's
-    pure-function helpers close over nothing module-level), keeping it
-    self-contained; tests pin driver-vs-worker byte parity."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-
-        import pandas as _pd
-
-        _W = BMP_WIDTH
-        _GCT = bytes(v for i in range(256) for v in (i, i, i))
-
-        def _lzw(data: bytes) -> bytes:
-            # Self-contained twin of _lzw_encode (min_code = 8): the
-            # decoder-lockstep width simulation, verbatim.
-            clear, end = 256, 257
-            out = bytearray()
-            bb = nb = 0
-
-            def emit(code, width):
-                nonlocal bb, nb
-                bb |= code << nb
-                nb += width
-                while nb >= 8:
-                    out.append(bb & 0xFF)
-                    bb >>= 8
-                    nb -= 8
-
-            table = {bytes([i]): i for i in range(256)}
-            next_code, width = 258, 9
-            dec_next, dec_first = 258, True
-            emit(clear, width)
-
-            def emitted():
-                nonlocal dec_next, dec_first, width
-                if dec_first:
-                    dec_first = False
-                    return
-                dec_next += 1
-                if dec_next == (1 << width) and width < 12:
-                    width += 1
-
-            w = b""
-            for byte in data:
-                wk = w + bytes([byte])
-                if wk in table:
-                    w = wk
-                    continue
-                emit(table[w], width)
-                emitted()
-                if next_code < 4096:
-                    table[wk] = next_code
-                    next_code += 1
-                else:
-                    emit(clear, width)
-                    table = {bytes([i]): i for i in range(256)}
-                    next_code, width = 258, 9
-                    dec_next, dec_first = 258, True
-                w = bytes([byte])
-            if w:
-                emit(table[w], width)
-                emitted()
-            emit(end, width)
-            if nb:
-                out.append(bb & 0xFF)
-            return bytes(out)
-
-        def _gif(gray: bytes) -> bytes:
-            h = len(gray) // _W
-            gray = gray[: _W * h]
-            stream = _lzw(gray)
-            blocks = b"".join(
-                bytes([len(stream[i : i + 255])]) + stream[i : i + 255]
-                for i in range(0, len(stream), 255)
-            ) + b"\x00"
-            return (
-                b"GIF89a"
-                + _struct.pack("<HHBBB", _W, h, 0xF7, 0, 0)
-                + _GCT
-                + _struct.pack("<BHHHHB", 0x2C, 0, 0, _W, h, 0)
-                + bytes([8])
-                + blocks
-                + b"\x3B"
-            )
-
-        for pdf in it:
-            yield _pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "payload": [
-                        _gif(t.encode("utf-8")) for t in pdf[src]
-                    ],
-                }
-            )
-
-    out = docs.select("doc_id", src).where(F.col(src).isNotNull())
-    if spread:
-        out = out.repartition(docs.sparkSession.sparkContext.defaultParallelism)
-    return out.mapInPandas(batches, schema="doc_id bigint, payload binary")
+    """Fixture builder: attach a REAL GIF89a (``build_gif``) whose
+    pixel grid is the document's utf-8 bytes (same grid contract as
+    with_bmp_payload / with_png_payload, so all three containers hold
+    the SAME image). Requires ``length(src) >= BMP_WIDTH`` upstream."""
+    return _with_encoded_payload(docs, src, build_gif, spread)
 
 
 def decode_image(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     """REAL image decode stage: payloads are genuine raster containers
     — uncompressed 24-bit BMP (``build_bmp``), 8-bit grayscale PNG
     (``build_png``) or LZW-compressed GIF89a (``build_gif``) —
-    dispatched on magic bytes and parsed on the workers: struct header
-    walk + un-flip + integer luma for BMP; chunk walk + zlib inflate +
-    per-row filter reconstruction for PNG; block walk + variable-width
-    LZW for GIF. Narrow map, Arrow batch in/out; the exact stage shape
-    a PIL-backed pipeline has, with the three raster codecs the stdlib
-    plus ~80 lines of LZW can express in the decode slot."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
-        import struct as _struct
-        import zlib as _zlib
-
-        import numpy as _np
-        import pandas as _pd
-
-        def _png_gray(payload: bytes) -> tuple:
-            # Self-contained twin of png_gray (workers can't import
-            # etl_spark): chunk walk, inflate, unfilter. Filter
-            # reconstruction is sequential within a row by definition
-            # (Sub/Average/Paeth read the just-reconstructed left
-            # neighbor), so this is a per-pixel loop — rows are
-            # BMP_WIDTH wide, bounded per doc.
-            pos = 8
-            idat = b""
-            w = h = None
-            while pos + 8 <= len(payload):
-                ln, tag = _struct.unpack_from(">I4s", payload, pos)
-                data = payload[pos + 8 : pos + 8 + ln]
-                if tag == b"IHDR":
-                    w, h = _struct.unpack(">II", data[:8])
-                elif tag == b"IDAT":
-                    idat += data
-                elif tag == b"IEND":
-                    break
-                pos += 12 + ln
-            raw = _zlib.decompress(idat)
-            # Vectorized unfilter (operators/media.py::_unfilter_png
-            # twin): None=copy, Sub=cumsum mod 256, Up=wrapping uint8
-            # add; Average/Paeth keep the genuine left-recurrence loop.
-            m = _np.frombuffer(raw, dtype=_np.uint8).reshape(h, w + 1)
-            out = _np.empty((h, w), dtype=_np.uint8)
-            prev = _np.zeros(w, dtype=_np.uint8)
-            for y in range(h):
-                ft = int(m[y, 0])
-                line = m[y, 1:]
-                if ft == 0:
-                    out[y] = line
-                elif ft == 1:
-                    out[y] = _np.cumsum(line, dtype=_np.uint64).astype(
-                        _np.uint8
-                    )
-                elif ft == 2:
-                    out[y] = line + prev
-                else:
-                    li, pl = line.tolist(), prev.tolist()
-                    rec = bytearray(w)
-                    a = 0
-                    for x in range(w):
-                        b = pl[x]
-                        if ft == 3:
-                            a = (li[x] + (a + b) // 2) & 0xFF
-                        else:
-                            c = pl[x - 1] if x else 0
-                            p = a + b - c
-                            pa, pb, pc = (
-                                abs(p - a), abs(p - b), abs(p - c),
-                            )
-                            a = (
-                                li[x]
-                                + (
-                                    a
-                                    if (pa <= pb and pa <= pc)
-                                    else (b if pb <= pc else c)
-                                )
-                            ) & 0xFF
-                        rec[x] = a
-                    out[y] = _np.frombuffer(bytes(rec), dtype=_np.uint8)
-                prev = out[y]
-            return w, h, out.tobytes()
-
-        # base symbol table built once per Arrow batch, copied per
-        # CLEAR — same hot-loop form as operators/media._lzw_decode
-        # (the closure stays self-contained for the worker)
-        _lzw_base = [bytes([i]) for i in range(256)] + [b"", b""]
-
-        def _lzw_dec(data: bytes) -> bytes:
-            # Self-contained twin of _lzw_decode (min_code = 8):
-            # variable-width LSB-first GIF LZW with CLEAR/KwKwK.
-            clear, end = 256, 257
-            pos = bb = nb = 0
-            out = bytearray()
-            table = _lzw_base.copy()
-            append = table.append
-            width, mask, next_code, prev_entry = 9, 511, 258, None
-            while True:
-                while nb < width:
-                    bb |= data[pos] << nb
-                    pos += 1
-                    nb += 8
-                code = bb & mask
-                bb >>= width
-                nb -= width
-                if code >= clear:
-                    if code == clear:
-                        table = _lzw_base.copy()
-                        append = table.append
-                        width, mask = 9, 511
-                        next_code, prev_entry = 258, None
-                        continue
-                    if code == end:
-                        return bytes(out)
-                if prev_entry is None:
-                    prev_entry = table[code]
-                    out += prev_entry
-                    continue
-                entry = (
-                    table[code]
-                    if code < next_code
-                    else prev_entry + prev_entry[:1]
-                )
-                out += entry
-                if next_code < 4096:
-                    append(prev_entry + entry[:1])
-                    next_code += 1
-                    if next_code == (1 << width) and width < 12:
-                        width += 1
-                        mask = (1 << width) - 1
-                prev_entry = entry
-
-        def _gif_gray(payload: bytes) -> tuple:
-            # Self-contained twin of gif_gray (builder always writes
-            # min_code=8, 256-gray GCT, no extensions/interlace).
-            packed = payload[10]
-            pos = 13
-            if packed & 0x80:
-                pos += 3 * (2 << (packed & 0x07))
-            while payload[pos] == 0x21:
-                pos += 2
-                while payload[pos]:
-                    pos += payload[pos] + 1
-                pos += 1
-            _l, _t, w, h, _ip = _struct.unpack_from(
-                "<HHHHB", payload, pos + 1
-            )
-            pos += 11  # descriptor (10) + min-code-size byte
-            stream = bytearray()
-            while payload[pos]:
-                ln = payload[pos]
-                stream += payload[pos + 1 : pos + 1 + ln]
-                pos += ln + 1
-            return w, h, _lzw_dec(bytes(stream))
-
-        def _decode(payload: bytes) -> tuple:
-            if payload[:8] == b"\x89PNG\r\n\x1a\n":
-                w, h, gray = _png_gray(payload)
-                arr = _np.frombuffer(gray, dtype=_np.uint8)
-                return (
-                    "image/png",
-                    w,
-                    h,
-                    8,
-                    w * h,
-                    int(arr.astype(_np.int64).sum()),
-                    _hashlib.md5(gray).hexdigest(),
-                )
-            if payload[:6] in (b"GIF87a", b"GIF89a"):
-                w, h, gray = _gif_gray(payload)
-                arr = _np.frombuffer(gray, dtype=_np.uint8)
-                return (
-                    "image/gif",
-                    w,
-                    h,
-                    8,
-                    w * h,
-                    int(arr.astype(_np.int64).sum()),
-                    _hashlib.md5(gray).hexdigest(),
-                )
-            # Self-contained twin of decode_bmp, vectorized with
-            # numpy (rows decode as a (h, row_size) uint8 matrix; the
-            # BGR->luma dot product and the bottom-up flip are array
-            # ops, not per-pixel Python).
-            offset = _struct.unpack_from("<I", payload, 10)[0]
-            (_ds, w, h, _p, bpp, comp) = _struct.unpack_from(
-                "<IiiHHI", payload, 14
-            )
-            if bpp != 24 or comp != 0:
-                raise ValueError(f"unsupported BMP bpp={bpp} comp={comp}")
-            top_down = h < 0
-            h = abs(h)
-            row_size = (w * 3 + 3) & ~3
-            mat = _np.frombuffer(
-                payload, dtype=_np.uint8, count=h * row_size, offset=offset
-            ).reshape(h, row_size)[:, : w * 3].reshape(h, w, 3)
-            if not top_down:
-                mat = mat[::-1]
-            bgr = mat.astype(_np.int64)
-            luma = (
-                299 * bgr[:, :, 2] + 587 * bgr[:, :, 1] + 114 * bgr[:, :, 0]
-            ) // 1000
-            luma_bytes = luma.astype(_np.uint8).tobytes()
-            return (
-                "image/bmp",
-                w,
-                h,
-                bpp,
-                w * h,
-                int(luma.sum()),
-                _hashlib.md5(luma_bytes).hexdigest(),
-            )
-
-        for pdf in it:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                mime, w, h, bpp, npx, lsum, lmd5 = _decode(bytes(payload))
-                rows.append((doc_id, mime, w, h, bpp, npx, lsum, lmd5))
-            yield _pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "mime", "width", "height", "bpp",
-                    "n_pixels", "luma_sum", "luma_md5",
-                ],
-            ).astype(
-                {
-                    "doc_id": "int64", "width": "int32", "height": "int32",
-                    "bpp": "int32", "n_pixels": "int64", "luma_sum": "int64",
-                }
-            )
-
-    return (
-        df.select("doc_id", payload_col)
-        .where(F.col(payload_col).isNotNull())
-        .mapInPandas(batches, schema=BMP_DECODE_SCHEMA)
-    )
+    dispatched on magic bytes and parsed on the workers by
+    ``decode_raster``: struct header walk + un-flip + integer luma for
+    BMP; chunk walk + CRC check + zlib inflate + per-row filter
+    reconstruction for PNG; block walk + variable-width LZW for GIF.
+    Narrow map, Arrow batch in/out; the exact stage shape a PIL-backed
+    pipeline has, with the three raster codecs the stdlib plus ~80
+    lines of LZW can express in the decode slot."""
+    return _payload_summaries(df, payload_col, decode_raster, BMP_DECODE_SCHEMA)
 
 
 def thumbnail_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -1660,103 +1054,20 @@ def thumbnail_features(df: DataFrame, payload_col: str = "payload") -> DataFrame
                      a transposed / flipped / mis-strided downsample
                      cannot hash-collide with the correct one
 
-    Narrow Arrow map: payloads never shuffle; the downsample is a
-    strided numpy add (four shifted views), no Python per pixel."""
+    Any other payload (GIF included) fails LOUDLY. Narrow Arrow map:
+    payloads never shuffle; the downsample is a strided numpy add
+    (four shifted views), no Python per pixel."""
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-        import zlib as _zlib
-
-        import numpy as _np
-        import pandas as _pd
-
-        def _gray(payload: bytes) -> "_np.ndarray":
-            # Self-contained raster decode twin (decode_image /
-            # perceptual_hash share the pattern; workers can't import
-            # etl_spark): returns the top-down (h, w) luminance grid.
-            if payload[:8] == b"\x89PNG\r\n\x1a\n":
-                pos, idat, w, h = 8, b"", None, None
-                while pos + 8 <= len(payload):
-                    ln, tag = _struct.unpack_from(">I4s", payload, pos)
-                    data = payload[pos + 8 : pos + 8 + ln]
-                    if tag == b"IHDR":
-                        w, h = _struct.unpack(">II", data[:8])
-                    elif tag == b"IDAT":
-                        idat += data
-                    elif tag == b"IEND":
-                        break
-                    pos += 12 + ln
-                raw = _zlib.decompress(idat)
-                # Vectorized unfilter twin (see _unfilter_png): only
-                # Average/Paeth rows keep the left-recurrence loop.
-                m = _np.frombuffer(raw, dtype=_np.uint8).reshape(h, w + 1)
-                out = _np.empty((h, w), dtype=_np.uint8)
-                prev = _np.zeros(w, dtype=_np.uint8)
-                for y in range(h):
-                    ft = int(m[y, 0])
-                    line = m[y, 1:]
-                    if ft == 0:
-                        out[y] = line
-                    elif ft == 1:
-                        out[y] = _np.cumsum(
-                            line, dtype=_np.uint64
-                        ).astype(_np.uint8)
-                    elif ft == 2:
-                        out[y] = line + prev
-                    else:
-                        li, pl = line.tolist(), prev.tolist()
-                        rec = bytearray(w)
-                        a = 0
-                        for x in range(w):
-                            b = pl[x]
-                            if ft == 3:
-                                a = (li[x] + (a + b) // 2) & 0xFF
-                            else:
-                                c = pl[x - 1] if x else 0
-                                p = a + b - c
-                                pa, pb, pc = (
-                                    abs(p - a), abs(p - b), abs(p - c),
-                                )
-                                a = (
-                                    li[x]
-                                    + (
-                                        a
-                                        if (pa <= pb and pa <= pc)
-                                        else (b if pb <= pc else c)
-                                    )
-                                ) & 0xFF
-                            rec[x] = a
-                        out[y] = _np.frombuffer(
-                            bytes(rec), dtype=_np.uint8
-                        )
-                    prev = out[y]
-                return out.astype(_np.int64)
-            # BMP: header walk, bottom-up un-flip, padding strip,
-            # integer ITU-R 601 luma (exact /1000 floor). Anything
-            # else fails LOUDLY — blindly struct-parsing a non-raster
-            # payload as a BMP would produce garbage geometry, not an
-            # error.
-            if payload[:2] != b"BM":
-                raise ValueError(
-                    "thumbnail_features expects a BMP or PNG payload"
-                )
-            offset = _struct.unpack_from("<I", payload, 10)[0]
-            (_ds, w, h, _p, _bpp, _c) = _struct.unpack_from(
-                "<IiiHHI", payload, 14
-            )
-            row_size = (w * 3 + 3) & ~3
-            mat = _np.frombuffer(
-                payload, dtype=_np.uint8, count=row_size * h, offset=offset
-            ).reshape(h, row_size)[::-1, : w * 3]
-            px = mat.reshape(h, w, 3).astype(_np.int64)
-            return (
-                px[:, :, 2] * 299 + px[:, :, 1] * 587 + px[:, :, 0] * 114
-            ) // 1000
-
         for pdf in it:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                g = _gray(bytes(payload))
+                payload = bytes(payload)
+                if payload[:2] != b"BM" and payload[:8] != _PNG_MAGIC:
+                    raise ValueError(
+                        "thumbnail_features expects a BMP or PNG payload"
+                    )
+                g = raster_luma(payload)[3].astype(np.int64)
                 h2, w2 = g.shape[0] // 2, g.shape[1] // 2
                 if h2 == 0 or w2 == 0:
                     continue
@@ -1766,7 +1077,7 @@ def thumbnail_features(df: DataFrame, payload_col: str = "payload") -> DataFrame
                     + g[1::2, 0::2] + g[1::2, 1::2]
                 ) // 4
                 flat = ds.ravel()
-                weights = _np.arange(1, flat.size + 1, dtype=_np.int64)
+                weights = np.arange(1, flat.size + 1, dtype=np.int64)
                 rows.append(
                     (
                         doc_id,
@@ -1776,7 +1087,7 @@ def thumbnail_features(df: DataFrame, payload_col: str = "payload") -> DataFrame
                         int((weights * flat).sum()),
                     )
                 )
-            yield _pd.DataFrame(
+            yield pd.DataFrame(
                 rows,
                 columns=["doc_id", "out_w", "out_h", "luma_sum", "luma_wsum"],
             ).astype(
@@ -1809,6 +1120,27 @@ PHASH_NOISE_STRIDE = 17
 # (make_sfbig shifts by 10M per copy, max ~100M at sf1).
 PHASH_VARIANT_OFFSET = 1_000_000_000
 
+_PHASH_BITS = 1 << np.arange(PHASH_SEGMENTS, dtype=np.int64)
+
+
+def _phash(arr: "np.ndarray") -> int:
+    """60-bit average hash of an int64 sample array. One cumsum per
+    payload instead of 60 sliced sums: segment boundaries
+    (s*n)//SEG are exact integer math, so the result is bit-identical
+    to the per-segment loop the oracle replays. Empty segments
+    (n < SEG) contribute bit 0 — 0*n >= total*0 would SET the bit and
+    make all short payloads look alike, so they are masked out;
+    registered queries filter length >= SEG and never hit this
+    branch."""
+    n = len(arr)
+    bounds = (np.arange(PHASH_SEGMENTS + 1, dtype=np.int64) * n) // PHASH_SEGMENTS
+    csum = np.concatenate(([0], np.cumsum(arr)))
+    ssums = csum[bounds[1:]] - csum[bounds[:-1]]
+    slens = bounds[1:] - bounds[:-1]
+    total = int(csum[-1])
+    bits = ((ssums * n) >= (total * slens)) & (slens > 0)
+    return int(_PHASH_BITS[bits].sum())
+
 
 def perceptual_hash(
     docs: DataFrame,
@@ -1840,9 +1172,9 @@ def perceptual_hash(
     continues downstream.
 
     ``pixel_decode=True`` IS the real image pipeline: payloads are
-    parsed as BMP containers (the same struct walk as decode_image)
-    and the fingerprint runs over the decoded top-down luminance grid
-    instead of raw container bytes — headers, padding and bottom-up
+    decoded by ``raster_luma`` (BMP, PNG or GIF) and the fingerprint
+    runs over the top-down row-major luminance grid instead of raw
+    container bytes — headers, padding, compression and bottom-up
     storage order no longer leak into the hash, so the fingerprint is
     a property of the IMAGE, not its serialization. Banding and the
     Hamming join downstream are unchanged, exactly as documented.
@@ -1850,225 +1182,41 @@ def perceptual_hash(
     luma sample — re-encode jitter where it physically lands), not
     header bytes.
     """
-
-    # Plain-int locals: the mapInPandas closure captures these BY VALUE
-    # (free variables pickle with the function), keeping the worker
-    # self-contained — etl_spark is not importable on workers when the
-    # driver runs from another cwd — while single-sourcing the
-    # constants the oracle SQL and tests mirror.
-    _SEG = PHASH_SEGMENTS
-    _STRIDE = PHASH_NOISE_STRIDE
-    _OFF = PHASH_VARIANT_OFFSET
-    _PIXELS = pixel_decode
+    carry_names = tuple(name for name, _ in carry)
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import struct as _struct
-        import zlib as _zlib
-
-        import numpy as _np
-        import pandas as _pd
-
-        _BITS = 1 << _np.arange(_SEG, dtype=_np.int64)
-
-        def _luma(payload: bytes) -> "_np.ndarray":
-            # Inline raster parse (decode_image's twin; closures stay
-            # self-contained for workers): top-down luminance grid,
-            # flattened row-major — the array the fingerprint sees.
-            # Dispatch on magic: PNG (chunk walk + inflate + per-row
-            # unfilter; gray IS luma) or BMP (header walk + un-flip +
-            # integer luma) — so the fingerprint is container-blind.
-            if payload[:8] == b"\x89PNG\r\n\x1a\n":
-                pos, idat, w, h = 8, b"", None, None
-                while pos + 8 <= len(payload):
-                    ln, tag = _struct.unpack_from(">I4s", payload, pos)
-                    data = payload[pos + 8 : pos + 8 + ln]
-                    if tag == b"IHDR":
-                        w, h = _struct.unpack(">II", data[:8])
-                    elif tag == b"IDAT":
-                        idat += data
-                    elif tag == b"IEND":
-                        break
-                    pos += 12 + ln
-                raw = _zlib.decompress(idat)
-                # Vectorized unfilter twin (see _unfilter_png): only
-                # Average/Paeth rows keep the left-recurrence loop.
-                m = _np.frombuffer(raw, dtype=_np.uint8).reshape(h, w + 1)
-                out = _np.empty((h, w), dtype=_np.uint8)
-                prev = _np.zeros(w, dtype=_np.uint8)
-                for y in range(h):
-                    ft = int(m[y, 0])
-                    line = m[y, 1:]
-                    if ft == 0:
-                        out[y] = line
-                    elif ft == 1:
-                        out[y] = _np.cumsum(
-                            line, dtype=_np.uint64
-                        ).astype(_np.uint8)
-                    elif ft == 2:
-                        out[y] = line + prev
-                    else:
-                        li, pl = line.tolist(), prev.tolist()
-                        rec = bytearray(w)
-                        a = 0
-                        for x in range(w):
-                            b = pl[x]
-                            if ft == 3:
-                                a = (li[x] + (a + b) // 2) & 0xFF
-                            else:
-                                c = pl[x - 1] if x else 0
-                                p = a + b - c
-                                pa, pb, pc = (
-                                    abs(p - a), abs(p - b), abs(p - c),
-                                )
-                                a = (
-                                    li[x]
-                                    + (
-                                        a
-                                        if (pa <= pb and pa <= pc)
-                                        else (b if pb <= pc else c)
-                                    )
-                                ) & 0xFF
-                            rec[x] = a
-                        out[y] = _np.frombuffer(
-                            bytes(rec), dtype=_np.uint8
-                        )
-                    prev = out[y]
-                return out.reshape(-1).astype(_np.int64)
-            if payload[:6] in (b"GIF87a", b"GIF89a"):
-                # Self-contained GIF twin (min_code=8 builder contract;
-                # see gif_gray/_lzw_decode).
-                clear, end = 256, 257
-                packed = payload[10]
-                pos = 13
-                if packed & 0x80:
-                    pos += 3 * (2 << (packed & 0x07))
-                while payload[pos] == 0x21:
-                    pos += 2
-                    while payload[pos]:
-                        pos += payload[pos] + 1
-                    pos += 1
-                _l, _t, w, h, _ip = _struct.unpack_from(
-                    "<HHHHB", payload, pos + 1
-                )
-                pos += 11
-                stream = bytearray()
-                while payload[pos]:
-                    ln = payload[pos]
-                    stream += payload[pos + 1 : pos + 1 + ln]
-                    pos += ln + 1
-                data = bytes(stream)
-                p2 = bb = nb = 0
-                outb = bytearray()
-                table = [bytes([i]) for i in range(256)] + [b"", b""]
-                width, next_code, prev = 9, 258, None
-                while True:
-                    while nb < width:
-                        bb |= data[p2] << nb
-                        p2 += 1
-                        nb += 8
-                    code = bb & ((1 << width) - 1)
-                    bb >>= width
-                    nb -= width
-                    if code == clear:
-                        table = [bytes([i]) for i in range(256)] + [b"", b""]
-                        width, next_code, prev = 9, 258, None
-                        continue
-                    if code == end:
-                        break
-                    if prev is None:
-                        outb += table[code]
-                        prev = code
-                        continue
-                    entry = (
-                        table[code]
-                        if code < next_code
-                        else table[prev] + table[prev][:1]
-                    )
-                    outb += entry
-                    if next_code < 4096:
-                        table.append(table[prev] + entry[:1])
-                        next_code += 1
-                        if next_code == (1 << width) and width < 12:
-                            width += 1
-                    prev = code
-                return _np.frombuffer(bytes(outb), dtype=_np.uint8).astype(
-                    _np.int64
-                )
-            offset = _struct.unpack_from("<I", payload, 10)[0]
-            (_ds, w, h, _p, _bpp, _c) = _struct.unpack_from(
-                "<IiiHHI", payload, 14
-            )
-            top_down = h < 0
-            h = abs(h)
-            row_size = (w * 3 + 3) & ~3
-            mat = _np.frombuffer(
-                payload, dtype=_np.uint8, count=h * row_size, offset=offset
-            ).reshape(h, row_size)[:, : w * 3].reshape(h, w, 3)
-            if not top_down:
-                mat = mat[::-1]
-            bgr = mat.astype(_np.int64)
-            return (
-                (
-                    299 * bgr[:, :, 2]
-                    + 587 * bgr[:, :, 1]
-                    + 114 * bgr[:, :, 0]
-                )
-                // 1000
-            ).reshape(-1)
-
-        def _phash(arr: "_np.ndarray") -> int:
-            # One cumsum per payload instead of 60 sliced sums: segment
-            # boundaries (s*n)//SEG are exact integer math, so the
-            # result is bit-identical to the per-segment loop the
-            # oracle replays. Empty segments (n < SEG) contribute bit 0
-            # — 0*n >= total*0 would SET the bit and make all short
-            # payloads look alike, so they are masked out; registered
-            # queries filter length >= SEG and never hit this branch.
-            n = len(arr)
-            bounds = (_np.arange(_SEG + 1, dtype=_np.int64) * n) // _SEG
-            csum = _np.concatenate(([0], _np.cumsum(arr)))
-            ssums = csum[bounds[1:]] - csum[bounds[:-1]]
-            slens = bounds[1:] - bounds[:-1]
-            total = int(csum[-1])
-            bits = ((ssums * n) >= (total * slens)) & (slens > 0)
-            return int(_BITS[bits].sum())
-
         for pdf in it:
             ids, hashes = [], []
-            carried: list[list] = [[] for _ in _carry_names]
+            carried: list[list] = [[] for _ in carry_names]
             for row_i, (doc_id, payload) in enumerate(
                 zip(pdf["doc_id"], pdf[payload_col])
             ):
                 payload = bytes(payload)
                 arr = (
-                    _luma(payload)
-                    if _PIXELS
-                    else _np.frombuffer(payload, dtype=_np.uint8).astype(
-                        _np.int64
-                    )
-                )
+                    raster_luma(payload)[3].reshape(-1)
+                    if pixel_decode
+                    else np.frombuffer(payload, dtype=np.uint8)
+                ).astype(np.int64)
                 ids.append(doc_id)
                 hashes.append(_phash(arr))
                 reps = 1
                 if noisy_variant:
-                    noisy = arr.copy()
-                    noisy[::_STRIDE] += 1
-                    ids.append(doc_id + _OFF)
-                    hashes.append(_phash(noisy))
+                    arr[::PHASH_NOISE_STRIDE] += 1
+                    ids.append(doc_id + PHASH_VARIANT_OFFSET)
+                    hashes.append(_phash(arr))
                     reps = 2
-                for ci, cname in enumerate(_carry_names):
+                for ci, cname in enumerate(carry_names):
                     carried[ci].extend([pdf[cname].iloc[row_i]] * reps)
             out = {"doc_id": ids, "phash": hashes}
-            for ci, cname in enumerate(_carry_names):
+            for ci, cname in enumerate(carry_names):
                 out[cname] = carried[ci]
-            yield _pd.DataFrame(out)
+            yield pd.DataFrame(out)
 
-    _carry_names = tuple(name for name, _ in carry)
     schema = PHASH_SCHEMA + "".join(
         f", {name} {typ}" for name, typ in carry
     )
     return (
-        docs.select("doc_id", payload_col, *_carry_names)
+        docs.select("doc_id", payload_col, *carry_names)
         .where(F.col(payload_col).isNotNull())
         .mapInPandas(batches, schema=schema)
     )
@@ -2095,44 +1243,22 @@ def audio_autocorr(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     from the fixture text and normalized ratios downstream are single
     exact divisions. Narrow Arrow map: one row out per clip, the
     payload never shuffles, per-clip work is numpy dot products."""
-    _LAGS = AUTOCORR_LAGS  # captured by value; workers can't import us
+    cols = ["doc_id", "n_samples", "r0"] + [f"r{L}" for L in AUTOCORR_LAGS]
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io as _io
-        import wave as _wave
-
-        import numpy as _np
-        import pandas as _pd
-
-        cols = ["doc_id", "n_samples", "r0"] + [f"r{L}" for L in _LAGS]
-        dtypes = {c: "int64" for c in cols}
-
         for pdf in it:
             rows = []
             for doc_id, payload in zip(pdf["doc_id"], pdf[payload_col]):
-                with _wave.open(_io.BytesIO(bytes(payload)), "rb") as w:
-                    if w.getsampwidth() != 1:
-                        raise ValueError(
-                            "audio_autocorr expects 8-bit PCM, got "
-                            f"sample width {w.getsampwidth()}"
-                        )
-                    pcm = w.readframes(w.getnframes())
-                n = len(pcm)
+                s = _pcm8_centered(payload, "audio_autocorr")
+                n = len(s)
                 if n == 0:
                     continue
-                s = _np.frombuffer(pcm, dtype=_np.uint8).astype(_np.int64) - 128
-                row = [int(doc_id), n, int(_np.dot(s, s))]
-                for L in _LAGS:
-                    row.append(int(_np.dot(s[:-L], s[L:])) if n > L else 0)
+                row = [int(doc_id), n, int(np.dot(s, s))]
+                for L in AUTOCORR_LAGS:
+                    row.append(int(np.dot(s[:-L], s[L:])) if n > L else 0)
                 rows.append(row)
-            yield (
-                _pd.DataFrame(rows, columns=cols)
-                if rows
-                else _pd.DataFrame(columns=cols).astype(dtypes)
-            )
+            yield pd.DataFrame(rows, columns=cols).astype("int64")
 
     return df.mapInPandas(
-        batches,
-        schema="doc_id bigint, n_samples bigint, r0 bigint, "
-        + ", ".join(f"r{L} bigint" for L in _LAGS),
+        batches, schema=", ".join(f"{c} bigint" for c in cols)
     )

@@ -49,10 +49,7 @@ _PROBE_ACCURACY = 1000
 
 
 def _bucket_count(df: DataFrame) -> int:
-    spark = df.sparkSession
-    n = spark.conf.get("etl_spark.rank.buckets", None)
-    if n is None:
-        n = spark.conf.get("spark.sql.shuffle.partitions", "32")
+    n = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     return max(1, int(n))
 
 
@@ -151,9 +148,9 @@ def global_rank_cumsum(
     # int offsets below 2^31 would otherwise keep the addition 32-bit
     # even when the global rank exceeds it). row_number itself bounds
     # a SINGLE bucket at 2^31-1 rows — at that point raise n_buckets
-    # (etl_spark.rank.buckets); boundary ties concentrating more than
-    # 2^31 rows on one key value are the one true limit of this
-    # primitive.
+    # (default: spark.sql.shuffle.partitions); boundary ties
+    # concentrating more than 2^31 rows on one key value are the one
+    # true limit of this primitive.
     out = bucketed.withColumn(
         rn_col,
         F.row_number().over(w).cast("bigint")

@@ -444,13 +444,9 @@ def _bucket_column(n_planes: int):
 
 def corpus_planes(spark: SparkSession, sf_dir: str) -> int:
     """Plane count from the corpus cardinality WITHOUT a per-build
-    count job over the data: config override first (the cluster
-    deployment path — table statistics / catalog row counts supply
-    this), then the parquet footer row count (metadata-only, no row
-    scan), then a count() as the last-resort fallback."""
-    n = spark.conf.get("etl_spark.ann.n_vectors", None)
-    if n is not None:
-        return eff_planes(int(n))
+    count job over the data: the parquet footer row count
+    (metadata-only, no row scan), with a count() as the last-resort
+    fallback."""
     try:
         import os
 

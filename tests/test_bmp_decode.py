@@ -1,7 +1,7 @@
 """Stdlib BMP codec fences: the encoder must emit a genuinely
 parseable 24-bit bitmap (header fields, bottom-up rows, 4-byte
-padding), the worker-side twins must byte-match the driver-side
-canonical functions, and the pixel-decode fingerprint must be a
+padding), the worker stages must byte-match the driver-side codecs
+they ship with, and the pixel-decode fingerprint must be a
 property of the IMAGE, not its serialization — the same pixels stored
 top-down and bottom-up must fingerprint identically, which the raw
 byte-segment fingerprint cannot do."""
@@ -16,9 +16,9 @@ from pyspark.sql import functions as F
 from etl_spark.operators.media import (
     BMP_WIDTH,
     build_bmp,
-    decode_bmp,
     decode_image,
     decode_payload,
+    decode_raster,
     perceptual_hash,
     sniff_mime,
     with_bmp_payload,
@@ -33,7 +33,7 @@ def test_bmp_header_fields_are_a_real_bitmap():
     bmp = build_bmp(_TEXT)
     h = len(_TEXT) // BMP_WIDTH
     row_size = (BMP_WIDTH * 3 + 3) & ~3
-    # Independent struct parse, not via decode_bmp.
+    # Independent struct parse, not via bmp_gray.
     assert bmp[:2] == b"BM"
     assert struct.unpack_from("<I", bmp, 2)[0] == len(bmp)
     assert struct.unpack_from("<I", bmp, 10)[0] == 54  # pixel offset
@@ -54,7 +54,7 @@ def test_decode_bmp_round_trip_and_dispatch():
     bmp = build_bmp(_TEXT)
     n = (len(_TEXT) // BMP_WIDTH) * BMP_WIDTH
     assert sniff_mime(bmp) == "image/bmp"
-    out = decode_bmp(bmp)
+    out = decode_raster(bmp)
     assert out["width"] == BMP_WIDTH
     assert out["height"] == len(_TEXT) // BMP_WIDTH
     assert out["n_pixels"] == n
@@ -105,7 +105,7 @@ def test_worker_stages_match_driver_codec(spark):
     decoded = {r["doc_id"]: r.asDict() for r in
                decode_image(with_bmp_payload(docs)).collect()}
     for doc_id, text in local.items():
-        want = decode_bmp(build_bmp(text.encode("utf-8")))
+        want = decode_raster(build_bmp(text.encode("utf-8")))
         got = decoded[doc_id]
         for k, v in want.items():
             assert got[k] == v, (doc_id, k)
@@ -140,7 +140,7 @@ def test_pixel_phash_is_serialization_invariant(spark):
 
 
 def test_unsupported_bmp_falls_back_to_byte_math_not_crash():
-    """A VALID BMP whose shape decode_bmp does not parse (32 bpp, or
+    """A VALID BMP whose shape bmp_gray does not parse (32 bpp, or
     BI_RLE8 compression) must sniff as octet-stream and decode via
     fake_features — not crash decode_payload with ValueError. The
     sniff and the decoder must agree on supported shapes."""

@@ -24,8 +24,8 @@ from etl_spark.operators.media import (
     build_bmp,
     build_png,
     build_wav,
-    decode_bmp,
     decode_payload,
+    decode_raster,
     png_gray,
 )
 
@@ -126,7 +126,7 @@ def test_bmp_container_roundtrip_property(gray, width):
         gray = gray + b"\x00" * (width - len(gray))
     h = len(gray) // width
     kept = gray[: width * h]
-    d = decode_bmp(build_bmp(gray, width=width))
+    d = decode_raster(build_bmp(gray, width=width))
     assert (d["width"], d["height"], d["n_pixels"]) == (width, h, width * h)
     assert d["luma_sum"] == sum(kept)
     assert d["luma_md5"] == hashlib.md5(kept).hexdigest()
@@ -153,7 +153,7 @@ def test_bmp_top_down_variant_decodes_identically(gray, width):
     body = payload[offset:]
     rows = [body[y * row_size : (y + 1) * row_size] for y in range(h)]
     flipped = bytes(hdr) + b"".join(reversed(rows))
-    assert decode_bmp(flipped) == decode_bmp(payload)
+    assert decode_raster(flipped) == decode_raster(payload)
 
 
 # --------------------------------------------------------------------------

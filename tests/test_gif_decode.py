@@ -1,7 +1,8 @@
 """GIF/LZW codec fences: a hand-packed known-bytes golden (independent
 of the encoder), roundtrips through every LZW regime (dictionary
 growth, KwKwK, 4096-entry reset), container-blindness across all
-three rasters, and driver-vs-worker byte parity."""
+three rasters, and byte parity between the worker builder stage and
+the driver-side encoder."""
 
 from __future__ import annotations
 
@@ -19,9 +20,7 @@ from etl_spark.operators.media import (
     build_bmp,
     build_gif,
     build_png,
-    decode_bmp,
-    decode_gif,
-    decode_png,
+    decode_raster,
     gif_gray,
     with_gif_payload,
 )
@@ -78,9 +77,9 @@ def test_gif_roundtrip_and_container_blindness(spark):
     assert docs
     for r in docs:
         raw = r["text"].encode("utf-8")
-        g = decode_gif(build_gif(raw))
-        p = decode_png(build_png(raw))
-        m = decode_bmp(build_bmp(raw))
+        g = decode_raster(build_gif(raw))
+        p = decode_raster(build_png(raw))
+        m = decode_raster(build_bmp(raw))
         # same pixel grid through three containers: everything but
         # mime/bpp must agree (BMP is 24-bit source, same luma)
         for k in ("width", "height", "n_pixels", "luma_sum", "luma_md5"):

@@ -79,8 +79,8 @@ def test_decode_dispatch_zlib_false_positive_falls_back():
 
 
 def test_decode_audio_stage_matches_driver_side_decode(spark):
-    # Parity between the worker closure (decode_audio's self-contained
-    # batch fn) and the canonical driver-side decode_payload dispatch.
+    # Parity between the worker stage (decode_audio) and the
+    # driver-side decode_payload dispatch.
     from etl_spark.operators.media import decode_audio, with_wav_payload
 
     docs = load(spark, SF_DIR, "documents").limit(30)

@@ -4,8 +4,8 @@ tests/test_bmp_decode.py: the encoder must emit a genuinely parseable
 IDAT) with every filter type (None/Sub/Up/Average/Paeth) load-bearing,
 the decoder must reconstruct the exact pixel grid, corruption under a
 true magic must fail LOUDLY (CRC check), valid-but-unsupported shapes
-must fall back rather than crash (the BMP lesson), the worker-side
-twins must byte-match the driver-side canonical functions, and the
+must fall back rather than crash (the BMP lesson), the worker
+stages must byte-match the driver-side codecs they ship with, and the
 pixel-decode fingerprint must be container-blind: the SAME image as a
 BMP and as a PNG must fingerprint identically."""
 
@@ -22,8 +22,8 @@ from etl_spark.operators.media import (
     build_bmp,
     build_png,
     decode_payload,
-    decode_png,
     decode_image,
+    decode_raster,
     perceptual_hash,
     png_gray,
     sniff_mime,
@@ -74,7 +74,7 @@ def test_png_round_trip_all_filters_and_dispatch():
     assert (w, h) == (BMP_WIDTH, len(_TEXT) // BMP_WIDTH)
     assert gray == _TEXT[:n]  # trailing partial row dropped
     assert sniff_mime(png) == "image/png"
-    out = decode_png(png)
+    out = decode_raster(png)
     assert out == {
         "mime": "image/png",
         "width": BMP_WIDTH,
@@ -109,7 +109,7 @@ def test_png_crc_corruption_fails_loudly():
 
 
 def test_unsupported_png_falls_back_to_byte_math_not_crash():
-    """A VALID PNG whose shape decode_png does not parse (16-bit
+    """A VALID PNG whose shape png_gray does not parse (16-bit
     depth, RGB color, Adam7 interlace) must sniff as octet-stream and
     decode via fake_features — sniff and decoder agree on supported
     shapes (the BMP lesson, applied on day one here)."""
@@ -161,7 +161,7 @@ def test_worker_stages_match_driver_codec(spark):
     decoded = {r["doc_id"]: r.asDict() for r in
                decode_image(with_png_payload(docs)).collect()}
     for doc_id, text in local.items():
-        want = decode_png(build_png(text.encode("utf-8")))
+        want = decode_raster(build_png(text.encode("utf-8")))
         got = decoded[doc_id]
         for k, v in want.items():
             assert got[k] == v, (doc_id, k)

@@ -134,6 +134,20 @@ def test_empty_extraction_is_a_noop(spark, tmp_path):
     assert _sorted_rows(read_snapshot_table(spark, table)) == before
 
 
+def test_load_extraction_reads_only_its_extraction(spark, tmp_path):
+    zone = tmp_path / "zone"
+    t1, t2 = "20250101-000000Z", "20250102-000000Z"
+    for repo in ("repo_1", "repo_2"):
+        write_run(zone, repo, t1, make_run(1, repo))
+        write_run(zone, repo, t2, make_run(2, repo))
+    batch = load_extraction(spark, zone, t2)
+    files = sorted(f.split("/zone/", 1)[1] for f in batch.inputFiles())
+    assert files == [f"repo_1/{t2}/runs/2.json", f"repo_2/{t2}/runs/2.json"]
+    assert {(r["repo"], r["id"]) for r in batch.collect()} == {
+        ("repo_1", 2), ("repo_2", 2),
+    }
+
+
 # --------------------------------------------------------------------------
 # The scale contract: touched-buckets-only read AND write.
 # --------------------------------------------------------------------------
