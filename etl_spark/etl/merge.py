@@ -105,6 +105,12 @@ def _bucketed(records: DataFrame) -> DataFrame:
     )
 
 
+def _touched_buckets(bucketed: DataFrame) -> list[int]:
+    """The distinct bucket ids a bucketed frame lands in — a
+    config-bounded collect: at most N_MERGE_BUCKETS ints."""
+    return [r[0] for r in bucketed.select(_BUCKET_COL).distinct().collect()]
+
+
 def init_snapshot_table(records: DataFrame, table_path: pathlib.Path) -> None:
     """Materialize the latest-snapshot view as the bucket-partitioned
     table (full build — run once, or to re-seed after schema change)."""
@@ -143,10 +149,7 @@ def merge_into_snapshot_table(
     one self-overwrite hazard of a path-based table.
     """
     batch = _bucketed(snapshot_latest(batch_records))
-    # Config-bounded collect: at most N_MERGE_BUCKETS distinct ints.
-    touched = [
-        r[0] for r in batch.select(_BUCKET_COL).distinct().collect()
-    ]
+    touched = _touched_buckets(batch)
     if not touched:
         return
     current = _read_touched(spark, table_path, touched)

@@ -62,10 +62,14 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_spark.etl.merge import N_MERGE_BUCKETS, _bucketed, latest_wins_merge
+from etl_spark.etl.merge import (
+    _BUCKET_COL,
+    _bucketed,
+    _touched_buckets,
+    latest_wins_merge,
+)
 from etl_spark.etl.pipeline import snapshot_latest
 
-_BUCKET_COL = "kb"
 _DATA = "data"
 _MANIFEST = "_manifest"
 _DELETES = "deletes"
@@ -307,10 +311,7 @@ def merge_versioned_table(
     dv = _read_dv(table, current_v)
 
     batch = _bucketed(snapshot_latest(batch_records))
-    # Config-bounded collect: at most N_MERGE_BUCKETS distinct ints.
-    touched = [
-        str(r[0]) for r in batch.select(_BUCKET_COL).distinct().collect()
-    ]
+    touched = [str(b) for b in _touched_buckets(batch)]
     if not touched:
         return current_v
     new_v = current_v + 1
@@ -433,17 +434,7 @@ def compact_versioned_deletes(
         return current_v
     current = _read_manifest(table, current_v)
     keys = spark.read.parquet(*[str(table / rel) for rel in dv])
-    # config-bounded collect: at most N_MERGE_BUCKETS distinct ints
-    touched = [
-        str(r[0])
-        for r in keys.select(
-            F.pmod(
-                F.xxhash64("repo_dir", "file_id"), F.lit(N_MERGE_BUCKETS)
-            ).alias(_BUCKET_COL)
-        )
-        .distinct()
-        .collect()
-    ]
+    touched = [str(b) for b in _touched_buckets(_bucketed(keys))]
     new_v = current_v + 1
     existing_dirs = [str(table / current[b]) for b in touched if b in current]
     buckets = dict(current)

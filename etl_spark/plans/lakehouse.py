@@ -62,6 +62,34 @@ CDC_DELETE_TYPE = "error"
 CDC_BATCH_MOD = 10
 
 
+def events_as_changelog(events: DataFrame) -> DataFrame:
+    """The events table (batch or stream) as a changelog
+    (user_id, event_id, ts, value, op): ``CDC_DELETE_TYPE`` events are
+    'D' tombstones, every other event a 'U' upsert."""
+    return events.select(
+        "user_id",
+        "event_id",
+        "ts",
+        "value",
+        F.when(F.col("event_type") == CDC_DELETE_TYPE, F.lit("D"))
+        .otherwise(F.lit("U"))
+        .alias("op"),
+    )
+
+
+def _latest_per_user(log: DataFrame) -> DataFrame:
+    """Each user's newest changelog row — later ts wins, equal ts →
+    higher event_id — tombstones kept."""
+    w = Window.partitionBy("user_id").orderBy(
+        F.col("ts").desc(), F.col("event_id").desc()
+    )
+    return (
+        log.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .drop("rn")
+    )
+
+
 def cdc_apply_log(log: DataFrame) -> DataFrame:
     """Incremental delete-aware apply over a changelog DataFrame with
     columns (user_id, event_id, ts, value, op) — the engine behind
@@ -71,24 +99,11 @@ def cdc_apply_log(log: DataFrame) -> DataFrame:
     ``op == 'U'`` to get the served view.
     """
     arriving = F.col("event_id") % CDC_BATCH_MOD == 0
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
     # Snapshot state BEFORE the batch lands: latest row per key over
     # history, tombstones kept — a snapshot that drops deletes early
     # cannot tell "deleted" from "never seen" at merge time.
-    snapshot = (
-        log.filter(~arriving)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
-    batch = (
-        log.filter(arriving)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+    snapshot = _latest_per_user(log.filter(~arriving))
+    batch = _latest_per_user(log.filter(arriving))
     return latest_wins_merge(
         snapshot, batch, keys=["user_id"], order_cols=["ts", "event_id"]
     )
@@ -135,15 +150,7 @@ def cdc_apply_log(log: DataFrame) -> DataFrame:
     tags=("lakehouse", "cdc", "merge", "incremental", "events"),
 )
 def cdc_apply_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    log = load(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        "ts",
-        "value",
-        F.when(F.col("event_type") == CDC_DELETE_TYPE, F.lit("D"))
-        .otherwise(F.lit("U"))
-        .alias("op"),
-    )
+    log = events_as_changelog(load(spark, sf_dir, "events"))
     merged = cdc_apply_log(log)
     # Serving view: tombstoned keys disappear only AFTER the merge.
     return merged.filter(F.col("op") == "U").select(
@@ -490,24 +497,13 @@ def events_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("lakehouse", "cdc", "diff", "events"),
 )
 def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    log = load(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        "ts",
-        "value",
-        F.when(F.col("event_type") == CDC_DELETE_TYPE, F.lit("D"))
-        .otherwise(F.lit("U"))
-        .alias("op"),
-    )
+    log = events_as_changelog(load(spark, sf_dir, "events"))
     arriving = F.col("event_id") % CDC_BATCH_MOD == 0
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
 
     def served(df: DataFrame) -> DataFrame:
         return (
-            df.withColumn("rn", F.row_number().over(w))
-            .filter((F.col("rn") == 1) & (F.col("op") == "U"))
+            _latest_per_user(df)
+            .filter(F.col("op") == "U")
             .select("user_id", "event_id", "value")
         )
 
@@ -562,30 +558,12 @@ def _refresh_parts(spark: SparkSession, sf_dir: str) -> dict:
     hop 3  freshness audit over the refreshed snapshot (a 1-row global
            scalar joined back broadcast).
     """
-    log = load(spark, sf_dir, "events").select(
-        "user_id",
-        "event_id",
-        "ts",
-        "value",
-        F.when(F.col("event_type") == CDC_DELETE_TYPE, F.lit("D"))
-        .otherwise(F.lit("U"))
-        .alias("op"),
-    )
+    log = events_as_changelog(load(spark, sf_dir, "events"))
     arriving = F.col("event_id") % CDC_BATCH_MOD == 0
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-
-    def latest(df: DataFrame) -> DataFrame:
-        return (
-            df.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
 
     # hop 1: stored state (tombstones kept) + batch -> refreshed state
-    old_state = latest(log.filter(~arriving))
-    batch = latest(log.filter(arriving))
+    old_state = _latest_per_user(log.filter(~arriving))
+    batch = _latest_per_user(log.filter(arriving))
     new_state = latest_wins_merge(
         old_state, batch, keys=["user_id"], order_cols=["ts", "event_id"]
     )

@@ -115,43 +115,22 @@ def kept_shingle_arrays(
     """Stop-shingle filter over PER-DOC shingle arrays: (doc_id, arr)
     → (doc_id, arr) with over-cap shingles removed in-row.
 
-    History of the shape (r11 opt, guide §2.5 hot keys + §5): the r9
-    stop filter (hot-list aggregate + broadcast anti-join over
-    exploded rows) was skew-free but evaluated the whole explode
-    twice; r10's shingle-partitioned window was single-pass but put
-    EVERY occurrence of a 100 TB boilerplate shingle into ONE task's
-    (spillable) window buffer before dropping it — a straggler by
-    construction — and still needed a doc-keyed window afterwards for
-    ``n_sh``, the surviving-shingle count per doc that pair consumers
-    need. (A shared-exchange anti-join was also tried and rejected:
-    column pruning diverges between the agg and join sides and
-    PushDownLeftSemiAntiJoin pushes the join below the repartition,
-    so the exchange is never actually reused.) Keeping
-    the filter at ARRAY granularity gets all three properties at
-    once: the per-doc arrays are localCheckpointed once (lazy,
-    DISK_ONLY, per-call — the mm_phash pattern, never cross-run
-    state) so tokenization runs exactly once at RDD level; df comes
-    from a map-combining count over one explode of the checkpoint (a
-    hot key costs one row per map task — no giant-key task anywhere);
-    the over-cap list is COLLECTED (config-sized driver state,
-    boilerplate shingles are few at any scale — the same contract as
+    Shape: the per-doc arrays are localCheckpointed once (lazy,
+    DISK_ONLY, per call — never cross-run state), so tokenization runs
+    exactly once; df comes from a map-combining count over one explode
+    of the checkpoint (a hot shingle costs one row per map task, so no
+    task receives every occurrence of a boilerplate shingle); the
+    over-cap list is COLLECTED (config-sized driver state —
+    boilerplate shingles are few at any scale, the same contract as
     the langid profile and the kmeans centroids) and removed in-row
-    with ``array_except`` against the literal, so hot occurrences
-    never cross an exchange, there is no join node at all, and n_sh
-    is a free ``size(arr)`` in the same projection: ZERO index-sized
-    exchanges between the tokenize and the final posting aggregate.
-    Measured at sf0.1 (interleaved min-of-4, posting-build noop):
-    window shape 1.47 s vs 1.86 s here — the +0.4 s is the checkpoint
-    materialization + the extra hot-list action, which this scale
-    doesn't amortize; at 100 TB the window shape wrote the same bytes
-    to shuffle disk TWICE (shingle window + doc window) while one
-    task single-threaded the hottest key.
+    with ``array_except`` against the literal. Hot occurrences never
+    cross an exchange, there is no join node, and the surviving
+    shingle count per doc is a free ``size(arr)`` downstream.
 
     Exact semantics: shingle_array emits per-doc DISTINCT shingles,
     so df counts docs; array_except(arr, hot) drops exactly the
     shingles with df > max_df and dedupes nothing new. No NULL
-    shingles exist (shingle_array emits non-null strings), so
-    array_except-vs-window NULL semantics never diverge.
+    shingles exist (shingle_array emits non-null strings).
     """
     from pyspark.storagelevel import StorageLevel
 
@@ -265,30 +244,20 @@ def posting_lists(spark: SparkSession, sf_dir: str) -> DataFrame:
       at {STOP_SHINGLE_MAX_DF}, so per-shingle pair emission is
       bounded and the exchanges+sorts of a shingle self-join vanish.
 
-    ``sizes[i]`` is doc ``docs[i]``'s surviving shingle-set size (r10
-    opt, guide §2.3 "shuffle keys and metadata instead of payloads" /
-    §2.4 "remove shuffles outright"): pair consumers need (na, nb) to
-    score Jaccard/containment, and zipping them onto the emitted pair
-    structs in-row costs 8 bytes/row in the pair stream — while the
-    former shape re-derived a doc_sizes table per consumer and
-    attached it with TWO sort-merge joins (pairs re-shuffled and
-    re-sorted twice, sizes shuffled twice). Measured at sf0.1
-    (interleaved min-of-4): dedup_jaccard_pairs from a warm index
-    1.86s → 0.95s.
+    ``sizes[i]`` is doc ``docs[i]``'s surviving shingle-set size:
+    pair consumers need (na, nb) to score Jaccard/containment, and
+    zipping them onto the emitted pair structs in-row costs 8
+    bytes/row in the pair stream instead of a doc_sizes join per
+    consumer.
 
     The stop filter runs BEFORE collect_list so a 100 TB hot shingle
     never materializes a giant in-memory list.
     """
 
     # ONE tokenization, ZERO index-sized exchanges before the final
-    # posting aggregate (r11 opt): the stop filter runs at per-doc
-    # ARRAY granularity (kept_shingle_arrays — hot shingles removed
-    # in-row against a broadcast over-cap list, the per-doc arrays
-    # checkpointed once), so n_sh is size(arr) in the same projection.
-    # The r10 shape paid a shingle-partitioned window (every
-    # occurrence of a hot shingle buffered in ONE task — a 100 TB
-    # straggler) plus a doc-keyed window for n_sh — two full
-    # exchanges of the exploded index that are simply gone here.
+    # posting aggregate: the stop filter runs at per-doc ARRAY
+    # granularity (kept_shingle_arrays), so n_sh is size(arr) in the
+    # same projection.
     def build() -> DataFrame:
         # toks in its OWN projection: split(text) inlined into the
         # shingle transform's lambda would re-split per shingle —
@@ -376,13 +345,8 @@ def pair_common_counts(
     set sizes ride the pair structs in-row (first() over a constant —
     n_sh is functional on the doc id).
 
-    This replaced the former join_pair_sizes shape (r10 opt, guide
-    §2.4): attaching sizes used to re-derive a doc_sizes table per
-    consumer and sort-merge-join it TWICE onto the aggregated pairs
-    (broadcast was banned — both sides corpus-derived, the sf1 drive's
-    measured heap-OOM), i.e. two extra shuffles+sorts of the pair
-    frame and two of the sizes per consumer. In-row sizes cost 8
-    bytes/row in the map-side pair stream instead.
+    Sizes ride in-row (8 bytes/row in the map-side pair stream), so
+    no consumer joins a doc_sizes table back onto the aggregated pairs.
     """
     return (
         posting.filter(F.size("docs") >= 2)
@@ -762,12 +726,8 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     Derives map-side from the cached posting lists (materialized
     inside posting_lists), so no extra action here. The md5 → hp hash
     lands on the POSTING row — once per distinct shingle — and the
-    shingle string is dropped BEFORE the doc explode (r10 opt, guide
-    §2.3 "narrower types"/"project before the exchange"): the former
-    shingles_df form carried the string through the explode and
-    re-hashed it once per (doc, shingle) occurrence. Measured at
-    sf0.1: signature pass 2.58s → 1.90s; the gap widens with
-    duplication (occurrences / distinct) at scale.
+    shingle string is dropped BEFORE the doc explode, so no string
+    crosses the explode and no shingle is hashed per occurrence.
     """
     posting = posting_lists(spark, sf_dir)
     hp = (
@@ -794,15 +754,11 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def cached_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-cached signature table — THE one materialized minhash
-    artifact (r11 opt, guide §5 "cache only what is reused"). Every
-    signature consumer derives from this cache: the pair-side joins
-    (dedup_minhash_error, the cross-split leakage audit) read it on
-    both aliased sides, and the LSH band "table" is now a cheap
-    arithmetic PROJECTION over it (_band_table below) instead of a
-    second session-cached materialization — the lsh family previously
-    persisted BOTH the band rows and (for the error/leakage queries)
-    the signatures, paying two build actions + two storage writes per
-    cold run where one suffices."""
+    artifact. Every signature consumer derives from this cache: the
+    pair-side joins (dedup_minhash_error, the cross-split leakage
+    audit) read it on both aliased sides, and the LSH band table is a
+    cheap arithmetic PROJECTION over it (_band_table below), not a
+    second materialization."""
     return session_cached(
         "minhash_signatures",
         spark,
@@ -816,10 +772,8 @@ def _band_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived map-side from the CACHED signature table (posexplode of
     four integer band hashes per row). Not separately persisted: with
     the signatures materialized, re-deriving the bands on each side of
-    a self-join costs integer arithmetic over an in-memory scan,
-    while persisting them (the r9–r10 shape) cost a dedicated build
-    action + storage write per cold run and duplicated the signature
-    bytes in storage."""
+    a self-join costs integer arithmetic over an in-memory scan, less
+    than a dedicated build action + storage write per cold run."""
     sig = cached_signatures(spark, sf_dir)
 
     def band_hash(b: int):

@@ -6,13 +6,14 @@ reference main.py:149-157) but cannot REMOVE a key: real changelogs
 (Debezium, Delta CDF) carry DELETE tombstones, and a consumer must
 keep tombstones in state — dropping a key on delete would let a
 late/redelivered stale upsert resurrect it incorrectly. This operator
-keeps (newest row, is-tombstone) per key and emits every touched key's
-current (row, op) so a downstream sink can upsert op='U' rows and
-delete op='D' keys.
+keeps each key's newest (row, op) — one native ``latest_by_key``
+aggregate, the op riding in the winning row — and emits every touched
+key's current (row, op) so a downstream sink can upsert op='U' rows
+and delete op='D' keys.
 
 Tiebreak contract matches the batch form exactly: later ts wins, equal
 ts → higher event_id wins; redelivery of an already-applied row is a
-no-op (state compare is deterministic, not arrival-order).
+no-op (the max is deterministic, not arrival-order).
 State is O(1) per key; tombstones stay in state (compaction/TTL is a
 separate retention policy, as in the batch twin's docstring).
 """
@@ -21,79 +22,42 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupStateTimeout
 
-OUTPUT_SCHEMA = (
-    "user_id bigint, event_id bigint, ts_us bigint, event_ts string,"
-    " value double, op string"
-)
-STATE_SCHEMA = "ts_us bigint, event_id bigint, value double, deleted boolean"
+from etl_spark.streaming.latest_wins import latest_by_key
+
+# Unpublished versions above the pointer younger than this may be the
+# stream's in-flight write of the next batch; vacuum leaves them alone.
+_ORPHAN_GRACE_S = 600.0
 
 
 def cdc_apply_stream(changelog: DataFrame) -> DataFrame:
     """Maintain per-user latest (row, op) over a changelog stream with
-    columns (user_id, event_id, ts, value, op) where op ∈ {'U','D'}."""
-
-    def update(key, pdf_iter, state):
-        # Self-contained closure (workers may lack repo on PYTHONPATH).
-        import pandas as pd
-
-        if state.exists:
-            best_us, best_id, best_val, deleted = state.get
-        else:
-            best_us, best_id, best_val, deleted = -1, -1, None, False
-        touched = False
-        for pdf in pdf_iter:
-            for ts, eid, val, op in zip(
-                pdf["ts"], pdf["event_id"], pdf["value"], pdf["op"]
-            ):
-                touched = True
-                us = ts.value // 1000
-                if us > best_us or (us == best_us and eid > best_id):
-                    best_us, best_id = int(us), int(eid)
-                    best_val = None if val != val else float(val)
-                    deleted = op == "D"
-        if not touched:
-            return
-        state.update((best_us, best_id, best_val, bool(deleted)))
-        # ts_us carries FULL microsecond precision downstream: the
-        # table sink tiebreaks on it, so its ordering must be exactly
-        # the ordering this state compare used. event_ts (seconds) is
-        # display parity with the batch query only — never compare it.
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "event_id": [best_id],
-                "ts_us": [best_us],
-                "event_ts": [
-                    pd.Timestamp(best_us * 1000).strftime("%Y-%m-%d %H:%M:%S")
-                ],
-                "value": [best_val],
-                "op": ["D" if deleted else "U"],
-            }
-        )
-
-    return changelog.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    columns (user_id, event_id, ts, value, op) where op ∈ {'U','D'}
+    (``plans/lakehouse.events_as_changelog`` maps the events stream to
+    that shape)."""
+    best = latest_by_key(
+        changelog.select(
+            "user_id",
+            F.unix_micros("ts").alias("ts_us"),
+            "event_id",
+            "value",
+            "op",
+        ),
+        ["user_id"],
+        ["ts_us", "event_id"],
     )
-
-
-def events_as_changelog(events: DataFrame, delete_type: str) -> DataFrame:
-    """Map the event stream to the generic changelog shape the operator
-    consumes (same rule as the batch query: ``delete_type`` events are
-    tombstones, everything else upserts)."""
-    return events.select(
+    # ts_us carries FULL microsecond precision downstream: the table
+    # sink tiebreaks on it, so its ordering must be exactly the
+    # ordering the in-stream max used. event_ts (seconds) is display
+    # parity with the batch query only — never compare it.
+    return best.select(
         "user_id",
         "event_id",
-        "ts",
+        "ts_us",
+        F.date_format(F.timestamp_micros("ts_us"), "yyyy-MM-dd HH:mm:ss")
+        .alias("event_ts"),
         "value",
-        F.when(F.col("event_type") == delete_type, F.lit("D"))
-        .otherwise(F.lit("U"))
-        .alias("op"),
+        "op",
     )
 
 
@@ -205,9 +169,7 @@ def read_cdc_table(spark, table_path) -> DataFrame:
     return read_cdc_table_raw(spark, table_path).filter(F.col("op") == "U")
 
 
-def vacuum_cdc_table(
-    table_path, keep_versions: int = 1, orphan_grace_s: float = 600.0
-) -> list[str]:
+def vacuum_cdc_table(table_path, keep_versions: int = 1) -> list[str]:
     """Retention for the versioned sink: delete version directories
     below the newest ``keep_versions`` (the published version is
     always retained). The atomic-pointer publish makes every batch an
@@ -216,16 +178,14 @@ def vacuum_cdc_table(
     the removed directory names, numerically ordered.
 
     Unpublished orphans ABOVE the pointer (a crash between data write
-    and publish) are removed only when older than ``orphan_grace_s``
+    and publish) are removed only when older than ``_ORPHAN_GRACE_S``
     seconds: a directory above the pointer younger than the grace
     window may be the stream's in-flight ``foreachBatch`` write of
     v<cur+1>, and rmtree-ing it would fail that batch (recoverable
     via replay, but avoidable). Below-pointer removals are always
     safe — the published pointer has moved past them and readers only
     ever resolve through the pointer. Vacuum is safe to run
-    concurrently with the single writer under the default grace; with
-    ``orphan_grace_s=0`` it must only run while the stream is
-    stopped."""
+    concurrently with the single writer."""
     import pathlib
     import shutil
     import time
@@ -246,7 +206,7 @@ def vacuum_cdc_table(
     for k, d in sorted(versioned):
         if k in keep:
             continue
-        if k > v and now - d.stat().st_mtime < orphan_grace_s:
+        if k > v and now - d.stat().st_mtime < _ORPHAN_GRACE_S:
             continue  # possibly the in-flight write of the next batch
         shutil.rmtree(d)
         removed.append(d.name)

@@ -63,6 +63,7 @@ from etl_spark.streaming.incremental_dedup import (
     WINDOW,
 )
 from etl_spark.streaming.phash_gate import _bands
+from etl_spark.streaming.sinks import drain_to_memory
 from etl_spark.streaming.trained_gate import score_documents
 
 #: One ingest-slice convention for the composed gate (both component
@@ -247,18 +248,13 @@ def run_triad_stream(
     """Drain the composed gate into the in-memory sink (update mode:
     at-ingest flagging semantics) and return the finished query handle
     (lastProgress carries the state-operator receipt)."""
-    q = (
+    return drain_to_memory(
         ingest_triad_stream(
             doc_stream, shingle_index, band_index, weights, threshold
-        )
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+        ),
+        name,
+        "update",
     )
-    q.awaitTermination()
-    return q
 
 
 def funnel_summary(verdicts: DataFrame) -> DataFrame:

@@ -28,14 +28,12 @@ WATERMARK_DELAY = "10 minutes"
 ATTRIBUTION_WINDOW = "1 hour"
 
 
-def click_purchase_attribution_stream(events: DataFrame) -> DataFrame:
-    """Inner stream-stream join: each purchase matched to every click
-    by the same user in the preceding ATTRIBUTION_WINDOW.
-
-    Both sides derive from one source stream by filtering — the same
-    physical reader feeds two logical streams, the standard fan-out
-    shape for event-type attribution.
-    """
+def _attribution_join(events: DataFrame, how: str) -> DataFrame:
+    """Click→purchase attribution join of ``how`` kind: per-side
+    watermarks plus the time-range condition that bounds both sides'
+    state. Both sides derive from one source stream by filtering — the
+    same physical reader feeds two logical streams, the standard
+    fan-out shape for event-type attribution."""
     clicks = (
         events.filter(F.col("event_type") == "click")
         .select(
@@ -63,6 +61,7 @@ def click_purchase_attribution_stream(events: DataFrame) -> DataFrame:
             F.col("purchase_ts")
             <= F.col("click_ts") + F.expr(f"INTERVAL {ATTRIBUTION_WINDOW}")
         ),
+        how,
     )
     return joined.select(
         F.col("c_user_id").alias("user_id"),
@@ -72,6 +71,12 @@ def click_purchase_attribution_stream(events: DataFrame) -> DataFrame:
         F.date_format("purchase_ts", "yyyy-MM-dd HH:mm:ss").alias("purchase_ts"),
         "purchase_value",
     )
+
+
+def click_purchase_attribution_stream(events: DataFrame) -> DataFrame:
+    """Inner stream-stream join: each purchase matched to every click
+    by the same user in the preceding ATTRIBUTION_WINDOW."""
+    return _attribution_join(events, "inner")
 
 
 def click_purchase_attribution_left_stream(events: DataFrame) -> DataFrame:
@@ -87,58 +92,7 @@ def click_purchase_attribution_left_stream(events: DataFrame) -> DataFrame:
     state; a drained backlog therefore emits null rows for every click
     whose match window is fully below the final watermark, and holds
     the rest — tests/test_streaming_joins.py pins both halves and
-    asserts the state metrics show the eviction.
+    asserts the state metrics show the eviction. Drain it in append
+    mode, the only output mode stream-stream joins support.
     """
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user_id"),
-            F.col("event_id").alias("click_id"),
-            F.col("ts").alias("click_ts"),
-        )
-        .withWatermark("click_ts", WATERMARK_DELAY)
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user_id"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("value").alias("purchase_value"),
-        )
-        .withWatermark("purchase_ts", WATERMARK_DELAY)
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("c_user_id") == F.col("p_user_id"))
-        & (F.col("purchase_ts") > F.col("click_ts"))
-        & (
-            F.col("purchase_ts")
-            <= F.col("click_ts") + F.expr(f"INTERVAL {ATTRIBUTION_WINDOW}")
-        ),
-        "leftOuter",
-    )
-    return joined.select(
-        F.col("c_user_id").alias("user_id"),
-        "click_id",
-        "purchase_id",
-        F.date_format("click_ts", "yyyy-MM-dd HH:mm:ss").alias("click_ts"),
-        F.date_format("purchase_ts", "yyyy-MM-dd HH:mm:ss").alias(
-            "purchase_ts"
-        ),
-        "purchase_value",
-    )
-
-
-def run_available_now_append(result: DataFrame, query_name: str):
-    """Drain the backlog into the in-memory sink in APPEND mode (the
-    only output mode stream-stream joins support) and stop."""
-    query = (
-        result.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
+    return _attribution_join(events, "leftOuter")

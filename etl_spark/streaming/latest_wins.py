@@ -19,53 +19,42 @@ winner; the last snapshot per key is the final answer.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupStateTimeout
+from pyspark.sql import functions as F
 
-OUTPUT_SCHEMA = (
-    "user_id bigint, event_type string, event_id bigint,"
-    " event_ts string, value double"
-)
-STATE_SCHEMA = "ts_us bigint, event_id bigint, value double"
+
+def latest_by_key(
+    df: DataFrame, keys: list[str], order_cols: list[str]
+) -> DataFrame:
+    """Each key's row with the greatest ``order_cols`` tuple, as one
+    native aggregate: ``max(struct(*order_cols, *rest))`` per key,
+    unpacked back to columns (keys, order_cols, then the remaining
+    columns in input order). Struct comparison is field by field, so
+    the order columns decide the winner; they must be unique per key
+    for the remaining fields never to break a tie.
+
+    On a stream the max lives in the aggregation state store: O(1)
+    state per key, and a redelivered older row can never displace the
+    stored winner. In update mode every key present in a micro-batch
+    emits its current winner."""
+    rest = [c for c in df.columns if c not in keys and c not in order_cols]
+    return (
+        df.groupBy(*keys)
+        .agg(F.max(F.struct(*order_cols, *rest)).alias("_win"))
+        .select(*keys, "_win.*")
+    )
 
 
 def latest_wins_stream(events: DataFrame) -> DataFrame:
     """Per-(user, type) newest event maintained across micro-batches."""
-
-    def update(key, pdf_iter, state):
-        # Self-contained closure (workers may lack repo on PYTHONPATH).
-        import pandas as pd
-
-        if state.exists:
-            best_us, best_id, best_val = state.get
-        else:
-            best_us, best_id, best_val = -1, -1, None
-        touched = False
-        for pdf in pdf_iter:
-            for ts, eid, val in zip(pdf["ts"], pdf["event_id"], pdf["value"]):
-                touched = True
-                us = ts.value // 1000
-                if us > best_us or (us == best_us and eid > best_id):
-                    best_us, best_id = int(us), int(eid)
-                    best_val = None if val != val else float(val)
-        if not touched:
-            return
-        state.update((best_us, best_id, best_val))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "event_type": [key[1]],
-                "event_id": [best_id],
-                "event_ts": [
-                    pd.Timestamp(best_us * 1000).strftime("%Y-%m-%d %H:%M:%S")
-                ],
-                "value": [best_val],
-            }
-        )
-
-    return events.groupBy("user_id", "event_type").applyInPandasWithState(
-        update,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    best = latest_by_key(
+        events.select("user_id", "event_type", "ts", "event_id", "value"),
+        ["user_id", "event_type"],
+        ["ts", "event_id"],
+    )
+    return best.select(
+        "user_id",
+        "event_type",
+        "event_id",
+        F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("event_ts"),
+        "value",
     )

@@ -11,7 +11,7 @@ State per user is O(1): (session_start_us, last_ts_us, n_events).
 Emission is update-mode: every batch that touches a user emits that
 user's CURRENT session row (plus any sessions the batch closed), so
 the latest snapshot per (user, session_start) is the session's final
-form — the same convergence contract as streaming/stateful.py.
+form.
 
 Ordering contract: events must arrive non-decreasing in event time per
 user ACROSS batches (in-batch disorder is fine — each batch sorts).
@@ -20,6 +20,19 @@ watermark-ordered upstream; the production hardening (buffering
 out-of-order rows in state until the watermark passes, with an
 event-time timeout to flush idle users) hangs off the same state
 machine and is orthogonal to the session logic tested here.
+
+These are the package's only Python state machines: gap logic and
+event-time timeouts have no native aggregate form, while latest-wins
+and running totals do (``latest_wins.latest_by_key``).
+
+API choice note: Spark 4 also ships the successor API
+``transformWithStateInPandas`` (StatefulProcessor + RocksDB store,
+composite/TTL state, timers). Its Python state-server protocol
+imports ``google.protobuf``, which is not a dependency of this project
+(without it the worker crashes with
+STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE on import), so the
+sessions stand on ``applyInPandasWithState`` — same state semantics
+for this small-tuple state, no extra dependency.
 """
 
 from __future__ import annotations

@@ -44,3 +44,24 @@ def start_idempotent_file_sink(events: DataFrame, out_path: str, checkpoint: str
         .trigger(availableNow=True)
         .start()
     )
+
+
+def drain_to_memory(result: DataFrame, name: str, output_mode: str):
+    """Drain the current backlog into the in-memory sink table ``name``
+    (Trigger.AvailableNow) and return the finished StreamingQuery —
+    its lastProgress carries the state-operator receipt.
+
+    ``output_mode`` is the stream's own contract: ``complete`` for
+    windowed tables the memory sink cannot update in place,
+    ``append`` for stateless stages and stream-stream joins,
+    ``update`` for keyed state that emits each touched key's current
+    row."""
+    query = (
+        result.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination()
+    return query

@@ -1,52 +1,21 @@
-"""Custom stateful streaming operator: running per-user counters via
-applyInPandasWithState.
+"""Running per-user counters across micro-batches.
 
-This is the escape hatch for stateful logic that windowed aggregation
-can't express (custom accumulators, decaying counters, per-entity
-session machines). State is partitioned by the grouping key and lives
-in the state store — at scale the concerns are: state size per key is
-O(1) here (two longs), the store is checkpointed per micro-batch, and
-a timeout policy (not needed for this demo) bounds idle-key retention.
-
-API choice note: Spark 4 also ships the successor API
-``transformWithStateInPandas`` (StatefulProcessor + RocksDB store,
-composite/TTL state, timers). Verified unavailable HERE: its Python
-state-server protocol imports ``google.protobuf``, which is not in
-this container (the worker crashes with
-STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE on import), so the
-stateful operators stand on ``applyInPandasWithState`` — same state
-semantics for these single-value-state shapes, no extra dependency.
+A count and a sum are incrementally mergeable, so the native
+streaming aggregate keeps them in the state store directly: state
+per key is O(1) (two values), checkpointed per micro-batch. Logic a
+native aggregate cannot express (gap-based sessions with event-time
+timeouts) lives in ``streaming/sessions.py``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupStateTimeout
-
-OUTPUT_SCHEMA = "user_id bigint, n_events bigint, total_value double"
-STATE_SCHEMA = "n bigint, total double"
+from pyspark.sql import functions as F
 
 
 def running_user_totals(events: DataFrame) -> DataFrame:
     """Per-user running (count, sum(value)) maintained across batches."""
-
-    def update(key, pdf_iter, state):
-        # Self-contained closure (workers may lack repo on PYTHONPATH).
-        import pandas as pd
-
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdf_iter:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return events.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum("value").alias("total_value"),
     )

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_spark.plans.llm_text import HASH_DIM
+from etl_spark.streaming.sinks import drain_to_memory
 
 
 def _bucket(t):
@@ -89,13 +90,6 @@ def run_gate_stream(
     """Drain the arriving docs through the frozen-model gate into the
     in-memory sink (append mode — stateless stage, every row emits
     exactly once)."""
-    q = (
-        score_documents(docs_stream, weights, threshold)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return drain_to_memory(
+        score_documents(docs_stream, weights, threshold), name, "append"
     )
-    q.awaitTermination()
-    return q

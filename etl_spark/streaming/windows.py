@@ -13,8 +13,8 @@ Design notes for the 100 TB / continuous case:
   max seen ts are dropped, so the window state store stays O(open
   windows), not O(history).
 * `available_now` trigger processes a backlog in bounded batches and
-  stops — the batch/stream bridge (used by tests; a deployment would
-  use a processingTime trigger).
+  stops — the batch/stream bridge (``sinks.drain_to_memory``, used by
+  tests; a deployment would use a processingTime trigger).
 * sinks: tests use the in-memory sink; production would writeStream
   to parquet with checkpointing for exactly-once.
 """
@@ -82,25 +82,6 @@ def sliding_counts_stream(events: DataFrame) -> DataFrame:
             "n_events",
         )
     )
-
-
-def run_available_now(result: DataFrame, query_name: str):
-    """Drain the current backlog into the in-memory sink and stop.
-
-    Complete output mode: every trigger emits the full updated window
-    table (needed because the memory sink has no update semantics for
-    this shape). Returns the StreamingQuery after it has consumed all
-    available input.
-    """
-    query = (
-        result.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
 
 
 # Static enrichment dim for the stream-static join: event_type →

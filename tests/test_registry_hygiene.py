@@ -218,3 +218,26 @@ def test_no_hand_rolled_session_memos():
         "applicationId read outside operators/caching.py — use "
         "session_memo:\n" + "\n".join(offenders)
     )
+
+
+def test_pandas_state_machines_only_in_sessions():
+    """applyInPandasWithState ships every micro-batch through a Python
+    worker; only the gap-session operators need it (gap logic and
+    event-time timeouts). Latest-wins and running totals are native
+    aggregates (streaming/latest_wins.latest_by_key)."""
+    import ast
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "etl_spark"
+    offenders = [
+        f"{path.relative_to(pkg)}:{node.lineno}"
+        for path in sorted(pkg.rglob("*.py"))
+        if str(path.relative_to(pkg)) != "streaming/sessions.py"
+        for node in ast.walk(ast.parse(path.read_text()))
+        if isinstance(node, ast.Attribute)
+        and node.attr == "applyInPandasWithState"
+    ]
+    assert not offenders, (
+        "applyInPandasWithState outside streaming/sessions.py — use a "
+        "native aggregate:\n" + "\n".join(offenders)
+    )

@@ -6,11 +6,8 @@ from __future__ import annotations
 import json
 
 from etl_spark.io import load
-from etl_spark.streaming.windows import (
-    hourly_counts_stream,
-    read_event_stream,
-    run_available_now,
-)
+from etl_spark.streaming.sinks import drain_to_memory
+from etl_spark.streaming.windows import hourly_counts_stream, read_event_stream
 from tests.conftest import SF_DIR
 
 from pyspark.sql import functions as F
@@ -42,7 +39,9 @@ def test_streaming_hourly_matches_batch(spark, tmp_path):
 
     stream = read_event_stream(spark, str(src))
     assert stream.isStreaming
-    query = run_available_now(hourly_counts_stream(stream), "hourly_test")
+    query = drain_to_memory(
+        hourly_counts_stream(stream), "hourly_test", "complete"
+    )
     try:
         got = {
             (r.window_start, r.event_type): (r.n_events, r.sum_value)
@@ -103,8 +102,8 @@ def test_stream_static_join_matches_batch(spark, tmp_path):
 
     dim = event_type_dim(spark)
     stream = read_event_stream(spark, str(src))
-    query = run_available_now(
-        enriched_category_totals_stream(stream, dim), "enrich_test"
+    query = drain_to_memory(
+        enriched_category_totals_stream(stream, dim), "enrich_test", "complete"
     )
     try:
         got = {

@@ -6,8 +6,8 @@ from __future__ import annotations
 
 import json
 
-from etl_spark.plans.lakehouse import CDC_DELETE_TYPE
-from etl_spark.streaming.cdc import cdc_apply_stream, events_as_changelog
+from etl_spark.plans.lakehouse import CDC_DELETE_TYPE, events_as_changelog
+from etl_spark.streaming.cdc import cdc_apply_stream
 from etl_spark.streaming.windows import read_event_stream
 from tests.conftest import SF_DIR
 
@@ -40,9 +40,7 @@ def test_streaming_cdc_matches_batch_replay(spark, duck, tmp_path):
     # upserts for keys deleted SINCE — must not change any key's state.
     (src / "b9999.json").write_text((src / "b0000.json").read_text())
 
-    changelog = events_as_changelog(
-        read_event_stream(spark, str(src)), CDC_DELETE_TYPE
-    )
+    changelog = events_as_changelog(read_event_stream(spark, str(src)))
     q = (
         cdc_apply_stream(changelog)
         .writeStream.format("memory")
@@ -125,9 +123,7 @@ def test_cdc_table_sink_matches_batch_query(spark, duck, tmp_path):
                     + "\n"
                 )
 
-    changelog = events_as_changelog(
-        read_event_stream(spark, str(src)), CDC_DELETE_TYPE
-    )
+    changelog = events_as_changelog(read_event_stream(spark, str(src)))
     table = tmp_path / "cdc_table"
     run_cdc_stream_to_table(spark, changelog, tmp_path / "ckpt", table)
 
@@ -182,9 +178,7 @@ def test_cdc_table_vacuum_keeps_published_state(spark, tmp_path):
                     )
                     + "\n"
                 )
-    changelog = events_as_changelog(
-        read_event_stream(spark, str(src)), CDC_DELETE_TYPE
-    )
+    changelog = events_as_changelog(read_event_stream(spark, str(src)))
     table = tmp_path / "cdc_table"
     run_cdc_stream_to_table(spark, changelog, tmp_path / "ckpt", table)
 

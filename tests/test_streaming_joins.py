@@ -10,13 +10,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_spark.io import load
-from etl_spark.streaming.joins import (
-    click_purchase_attribution_stream,
-    run_available_now_append,
-)
+from etl_spark.streaming.joins import click_purchase_attribution_stream
+from etl_spark.streaming.sinks import drain_to_memory
 from etl_spark.streaming.windows import (
     read_event_stream,
-    run_available_now,
     sliding_counts_stream,
 )
 from tests.conftest import SF_DIR
@@ -49,7 +46,9 @@ def stream_src(spark, tmp_path_factory):
 
 def test_sliding_stream_matches_batch(spark, stream_src):
     stream = read_event_stream(spark, str(stream_src))
-    query = run_available_now(sliding_counts_stream(stream), "sliding_test")
+    query = drain_to_memory(
+        sliding_counts_stream(stream), "sliding_test", "complete"
+    )
     try:
         got = {
             (r.window_start, r.event_type): r.n_events
@@ -75,8 +74,8 @@ def test_sliding_stream_matches_batch(spark, stream_src):
 
 def test_stream_stream_join_matches_batch(spark, stream_src):
     stream = read_event_stream(spark, str(stream_src))
-    query = run_available_now_append(
-        click_purchase_attribution_stream(stream), "attribution_test"
+    query = drain_to_memory(
+        click_purchase_attribution_stream(stream), "attribution_test", "append"
     )
     try:
         got = {
@@ -173,8 +172,10 @@ def test_stream_stream_left_outer_join_expiry(spark, stream_src, tmp_path):
             )
 
     stream = read_event_stream(spark, str(src))
-    query = run_available_now_append(
-        click_purchase_attribution_left_stream(stream), "left_attr_test"
+    query = drain_to_memory(
+        click_purchase_attribution_left_stream(stream),
+        "left_attr_test",
+        "append",
     )
     try:
         progresses = query.recentProgress
